@@ -11,12 +11,20 @@ a table directory holds immutable version directories ``v-<hex>/`` plus
 a ``_MANIFEST`` file naming the current one.  Every mutation writes a
 COMPLETE new version directory first, then commits by atomically
 replacing the manifest (``os.replace`` — an atomic rename on POSIX).
+Each version directory also holds ``_SCHEMA``, the written frame's
+schema as JSON (Spark skips ``_``-prefixed names when listing data
+files); since a version never changes, ``read_table`` pins that schema
+instead of launching a parquet footer-inference job on every read, and
+falls back to inference for versions without it (migrated legacy
+directories, tables written before the file existed).
 Readers resolve the manifest once and read an immutable directory, so a
 reader can never observe a half-written table; a reader that resolved
 the previous version keeps reading its (still-present) files until
 ``vacuum`` reclaims them.  Writers serialize through an advisory
 ``_LOCK`` mutex (``table_lock`` — exclusive-create with stale-lock
-breaking), so concurrent mutations can't race the manifest swap.  This
+breaking) held across each mutation's read of the current version AND
+its manifest swap, so a concurrent commit can neither race the swap nor
+be silently overwritten by a merge computed from a stale snapshot.  This
 is the same reader/writer isolation a transactional table format
 provides; a production deployment on an object store swaps in
 Iceberg/Delta/Hudi (or their lock services) without changing any plan
@@ -25,14 +33,21 @@ shape here.
 Scale posture: an upsert is one left-anti join (survivors) + a union —
 shuffle keyed on the merge key, broadcast when the update batch is
 small (the common case for incremental loads: a day's delta vs a full
-table).  Partition-overwrite writes only the partitions present in the
-incoming batch (`partitionOverwriteMode=dynamic`), so a daily load
-touches one date partition of a 100 TB table instead of rewriting it.
+table).  Every keyed load first checks its batch is key-unique with ONE
+grouped action that stops at the first duplicate key
+(``groupBy(key).count() > 1`` + ``limit(1)``): a single shuffle of the
+batch, not a row count plus a distinct-key count.  For a day's batch
+the cost of a Spark job is mostly fixed per-job overhead, so the load
+path is built to launch as few jobs as it can.  Partition-overwrite
+writes only the partitions present in the incoming batch (the per-write
+``partitionOverwriteMode=dynamic`` option), so a daily load touches one
+date partition of a 100 TB table instead of rewriting it.
 """
 
 from __future__ import annotations
 
 import contextlib
+import json
 import os
 import shutil
 import time
@@ -40,11 +55,13 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_MANIFEST"
 LOG = "_LOG"
 SPEC = "_SPEC"
 LOCK = "_LOCK"
+SCHEMA = "_SCHEMA"
 _VERSION_PREFIX = "v-"
 
 
@@ -133,8 +150,6 @@ def table_spec(path: str) -> dict:
     at create time in ``_SPEC`` and honored by every later rewrite, so a
     table's physical layout survives merges/compaction — the same role
     as a table format's partition spec."""
-    import json
-
     spec_path = os.path.join(path, SPEC)
     if not os.path.exists(spec_path):
         return {"partition_by": []}
@@ -142,13 +157,37 @@ def table_spec(path: str) -> dict:
         return json.load(f)
 
 
-def _write_version(df: DataFrame, path: str, version: str) -> None:
-    """Write a version directory honoring the table's partition spec."""
+def _commit_new_version(df: DataFrame, path: str) -> None:
+    """Write ``df`` as a new version directory honoring the table's
+    partition spec, with its ``_SCHEMA``, then commit it."""
     part = table_spec(path).get("partition_by", [])
     writer = df.write
     if part:
         writer = writer.partitionBy(*part)
-    writer.parquet(os.path.join(path, version))
+    version = _new_version()
+    vdir = os.path.join(path, version)
+    writer.parquet(vdir)
+    with open(os.path.join(vdir, SCHEMA), "w") as f:
+        f.write(df.schema.json())
+    _commit(path, version)
+
+
+def _check_key_unique(df: DataFrame, key: list[str], what: str) -> None:
+    """Raise ValueError(``what`` + the offending key) if two rows of
+    ``df`` share a key.  One grouped action that stops at the first
+    duplicate; NULL keys group together, so they compare equal, as
+    under ``distinct``."""
+    dup = (
+        df.groupBy(*key)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .where(F.col("__n") > 1)
+        .limit(1)
+        .collect()
+    )
+    if dup:
+        row = dup[0].asDict()
+        n = row.pop("__n")
+        raise ValueError(f"{what}: key {row} appears {n} times")
 
 
 def create_table(
@@ -160,17 +199,13 @@ def create_table(
     every version directory is hive-partitioned on these columns, so
     scans with partition-key predicates prune at the directory level
     (PartitionFilters) in every snapshot, including time-travel reads."""
-    import json
-
     os.makedirs(path, exist_ok=True)
     if partition_by:
         tmp = os.path.join(path, f".{SPEC}.{uuid.uuid4().hex[:8]}")
         with open(tmp, "w") as f:
             json.dump({"partition_by": list(partition_by)}, f)
         os.replace(tmp, os.path.join(path, SPEC))
-    version = _new_version()
-    _write_version(df, path, version)
-    _commit(path, version)
+    _commit_new_version(df, path)
 
 
 def list_versions(path: str) -> list[str]:
@@ -195,7 +230,13 @@ def read_table(
     Time travel: ``version`` pins a snapshot — a version name from
     ``list_versions`` or a negative index into it (``-2`` = the commit
     before current), like a table format's VERSION AS OF. Raises
-    KeyError for a vacuumed/unknown version."""
+    KeyError for a vacuumed/unknown version.
+
+    The read uses the version's ``_SCHEMA`` when it has one, so it
+    launches no schema-inference job; the columns, their order and
+    their types are the written frame's (partition columns last, as
+    under inference, and typed as written rather than re-inferred from
+    directory names)."""
     if version is None:
         v = current_version(path)
     else:
@@ -209,7 +250,13 @@ def read_table(
                 f"version {version!r} not available (vacuumed or never "
                 f"committed); on disk: {versions}"
             )
-    return spark.read.parquet(os.path.join(path, v))
+    vdir = os.path.join(path, v)
+    try:
+        with open(os.path.join(vdir, SCHEMA)) as f:
+            schema = StructType.fromJson(json.load(f))
+    except FileNotFoundError:
+        return spark.read.parquet(vdir)
+    return spark.read.schema(schema).parquet(vdir)
 
 
 def vacuum(path: str) -> list[str]:
@@ -267,7 +314,7 @@ def merge_upsert(
     a different, destructive operation and stays explicit); without the
     flag, any schema difference raises.
 
-    Plan: target ⟕̸ updates (left-anti on the key — keeps survivors)
+    Plan (``_upsert_plan``): target ⟕̸ updates (left-anti on the key — keeps survivors)
     ∪ updates.  The updates side is deduplicated on the key first
     (last-write-wins needs an explicit ordering column; here the batch
     is required to be key-unique, asserted).
@@ -277,35 +324,41 @@ def merge_upsert(
     callers see the old version until the commit instant and the new
     one after — never a mix, never missing files.
     """
-    n_updates = updates.count()
-    n_keys = updates.select(*key).distinct().count()
-    if n_updates != n_keys:
-        raise ValueError(
-            f"update batch must be key-unique on {key}: "
-            f"{n_updates} rows, {n_keys} distinct keys"
-        )
+    _check_key_unique(
+        updates, key, f"update batch must be key-unique on {key}"
+    )
     if not is_managed(path):
         _migrate_legacy(path)
     with table_lock(path):
         target = read_table(spark, path)
-        missing = set(target.columns) - set(updates.columns)
-        added = set(updates.columns) - set(target.columns)
-        if missing:
-            raise ValueError(
-                f"update batch lacks table columns {sorted(missing)}; "
-                "upserts must provide every existing column"
-            )
-        if added and not allow_new_columns:
-            raise ValueError(
-                f"update batch adds columns {sorted(added)}; pass "
-                "allow_new_columns=True to evolve the table schema"
-            )
-        merged = target.join(
-            updates.select(*key), key, "left_anti"
-        ).unionByName(updates, allowMissingColumns=bool(added))
-        version = _new_version()
-        _write_version(merged, path, version)
-        _commit(path, version)
+        _commit_new_version(
+            _upsert_plan(target, updates, key, allow_new_columns), path
+        )
+
+
+def _upsert_plan(
+    target: DataFrame,
+    updates: DataFrame,
+    key: list[str],
+    allow_new_columns: bool = False,
+) -> DataFrame:
+    """The merged table of ``merge_upsert`` (survivors ∪ updates), after
+    its schema checks; the caller holds the table lock."""
+    missing = set(target.columns) - set(updates.columns)
+    added = set(updates.columns) - set(target.columns)
+    if missing:
+        raise ValueError(
+            f"update batch lacks table columns {sorted(missing)}; "
+            "upserts must provide every existing column"
+        )
+    if added and not allow_new_columns:
+        raise ValueError(
+            f"update batch adds columns {sorted(added)}; pass "
+            "allow_new_columns=True to evolve the table schema"
+        )
+    return target.join(
+        updates.select(*key), key, "left_anti"
+    ).unionByName(updates, allowMissingColumns=bool(added))
 
 
 def overwrite_partitions(
@@ -313,19 +366,18 @@ def overwrite_partitions(
 ) -> None:
     """Dynamic partition overwrite: replaces ONLY the partitions present
     in ``df``, leaving all other partitions of the table untouched —
-    the incremental daily-load primitive."""
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
+    the incremental daily-load primitive.  The mode is set on this write
+    alone, never on the session, so a concurrent STATIC overwrite on the
+    same session keeps its meaning."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
 
 
 # --- SCD-2 (history-keeping) dimension merge ------------------------------
-
-_SCD2_COLS = ("valid_from", "valid_to", "is_current")
-
 
 def create_scd2_table(
     df: DataFrame, path: str, effective_ts: str
@@ -354,64 +406,76 @@ def scd2_merge(
     unseen keys insert as new open rows.  History rows are carried over
     unchanged, giving as-of queries the full version chain.
 
-    Plan: one full outer join of the CURRENT slice against the update
-    batch on the key (both sides one row per key — the current slice by
-    the SCD-2 invariant, the batch by assertion), then three narrow
-    projections unioned with the history slice.  Everything shuffles on
-    the dimension key once; at 100 TB dims this is a standard keyed
-    merge, and the commit is the same atomic manifest swap as
-    ``merge_upsert``.
+    Plan (``_scd2_plan``): one full outer join of the WHOLE target
+    against the update batch on ``is_current AND key <=> key``.  Both
+    join sides are one row per key (the open rows by the SCD-2
+    invariant, the batch by the key check); history rows never satisfy
+    the condition, so each comes out of the join alone and is carried
+    verbatim.  One projection then emits one or two rows per joined
+    row: the target row (closed when a differing update matched it) and
+    a fresh open row for a new key or a differing update.  One scan of
+    the target, one shuffle on the dimension key, one generate — at
+    100 TB dims a standard keyed merge — and the commit is the same
+    atomic manifest swap as ``merge_upsert``, under the same lock as the
+    read of the target.
     """
-    n_updates = updates.count()
-    n_keys = updates.select(*key).distinct().count()
-    if n_updates != n_keys:
-        raise ValueError(
-            f"update batch must be key-unique on {key}: "
-            f"{n_updates} rows, {n_keys} distinct keys"
+    _check_key_unique(
+        updates, key, f"update batch must be key-unique on {key}"
+    )
+    with table_lock(path):
+        target = read_table(spark, path)
+        _commit_new_version(
+            _scd2_plan(target, updates, key, effective_ts), path
         )
-    target = read_table(spark, path)
+
+
+def _scd2_plan(
+    target: DataFrame, updates: DataFrame, key: list[str], effective_ts: str
+) -> DataFrame:
+    """The merged dimension of ``scd2_merge``, in the target's column
+    order."""
     attrs = [c for c in updates.columns if c not in key]
     eff = F.lit(effective_ts).cast("timestamp")
 
-    cur = target.filter(F.col("is_current"))
-    hist = target.filter(~F.col("is_current"))
     # Presence markers: never-null columns on each side, so outer-join
     # row provenance doesn't depend on attr/key nullability.
-    c = cur.withColumn("__c", F.lit(True)).alias("c")
+    t = target.withColumn("__t", F.lit(True)).alias("t")
     u = updates.withColumn("__u", F.lit(True)).alias("u")
-    cond = F.expr(" AND ".join(f"c.{k} <=> u.{k}" for k in key))
-    joined = c.join(u, cond, "full_outer")
+    cond = F.col("t.is_current") & F.expr(
+        " AND ".join(f"t.{k} <=> u.{k}" for k in key)
+    )
+    joined = t.join(u, cond, "full_outer")
 
     differs = F.lit(False)
     for a in attrs:
-        differs = differs | ~F.col(f"c.{a}").eqNullSafe(F.col(f"u.{a}"))
-    has_c = F.col("c.__c").isNotNull()
-    has_u = F.col("u.__u").isNotNull()
+        differs = differs | ~F.col(f"t.{a}").eqNullSafe(F.col(f"u.{a}"))
+    has_t = F.col("t.__t").isNotNull()
+    has_u = F.col("u.__u").isNotNull()  # on a target row: it is open
+    closes = has_t & has_u & differs
+    opens = has_u & (~has_t | differs)
 
-    cur_cols = [F.col(f"c.{col}").alias(col) for col in cur.columns]
-    # 1) current rows that stay open: no update, or update equal
-    kept = joined.filter(has_c & (~has_u | ~differs)).select(*cur_cols)
-    # 2) current rows closed by a differing update
-    closed = joined.filter(has_c & has_u & differs).select(
-        *[F.col(f"c.{col}").alias(col) for col in cur.columns
-          if col not in ("valid_to", "is_current")],
-        eff.alias("valid_to"),
-        F.lit(False).alias("is_current"),
-    ).select(*[F.col(col) for col in cur.columns])
-    # 3) new open rows: new key, or differing update
-    fresh = joined.filter(has_u & (~has_c | differs)).select(
-        *[F.col(f"u.{k}").alias(k) for k in key],
-        *[F.col(f"u.{a}").alias(a) for a in attrs],
-        eff.alias("valid_from"),
-        F.lit(None).cast("timestamp").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-    ).select(*[F.col(col) for col in cur.columns])
+    def kept_or_closed(col: str):
+        if col == "valid_to":
+            return F.when(closes, eff).otherwise(F.col("t.valid_to"))
+        if col == "is_current":
+            return F.when(closes, F.lit(False)).otherwise(F.col("t.is_current"))
+        return F.col(f"t.{col}")
 
-    merged = hist.unionByName(kept).unionByName(closed).unionByName(fresh)
-    with table_lock(path):
-        version = _new_version()
-        _write_version(merged, path, version)
-        _commit(path, version)
+    def fresh(col: str):
+        if col == "valid_from":
+            return eff
+        if col == "valid_to":
+            return F.lit(None).cast("timestamp")
+        if col == "is_current":
+            return F.lit(True)
+        return F.col(f"u.{col}")
+
+    cols = target.columns
+    rows = F.array(
+        F.when(has_t, F.struct(*[kept_or_closed(c).alias(c) for c in cols])),
+        F.when(opens, F.struct(*[fresh(c).alias(c) for c in cols])),
+    )
+    return joined.select(F.inline(F.filter(rows, lambda r: r.isNotNull())))
 
 
 def compact_table(
@@ -438,16 +502,14 @@ def compact_table(
     with table_lock(path):
         df = read_table(spark, path)
         n_files = max(1, math.ceil(df.count() / target_file_rows))
-        version = _new_version()
         part = table_spec(path).get("partition_by", [])
         if part:
             # partitioned table: compact WITHIN partitions (repartition
             # on the partition key so each hive directory gets one full
             # file)
-            _write_version(df.repartition(*part), path, version)
+            _commit_new_version(df.repartition(*part), path)
         else:
-            _write_version(df.repartition(n_files), path, version)
-        _commit(path, version)
+            _commit_new_version(df.repartition(n_files), path)
     return n_files
 
 
@@ -499,38 +561,37 @@ def cluster_table(
             f"(partition spec {part}); cluster within partitions via a "
             "per-partition rewrite instead"
         )
-    df = read_table(spark, path)
+    with table_lock(path):
+        df = read_table(spark, path)
 
-    def _as_long(c: str):
-        dt = dict(df.dtypes)[c]
-        col = F.col(c)
-        return F.unix_timestamp(col) if dt.startswith("timestamp") else col.cast("long")
+        def _as_long(c: str):
+            dt = dict(df.dtypes)[c]
+            col = F.col(c)
+            return F.unix_timestamp(col) if dt.startswith("timestamp") else col.cast("long")
 
-    stats = df.agg(
-        *(F.min(_as_long(c)).alias(f"mn_{i}") for i, c in enumerate(cols)),
-        *(F.max(_as_long(c)).alias(f"mx_{i}") for i, c in enumerate(cols)),
-    ).first()
+        stats = df.agg(
+            *(F.min(_as_long(c)).alias(f"mn_{i}") for i, c in enumerate(cols)),
+            *(F.max(_as_long(c)).alias(f"mx_{i}") for i, c in enumerate(cols)),
+        ).first()
 
-    def _bucket(c: str, i: int):
-        mn, mx = stats[f"mn_{i}"], stats[f"mx_{i}"]
-        span = max(1, mx - mn)
-        return F.least(
-            F.lit(65535),
-            ((_as_long(c) - F.lit(mn)) * 65535 / F.lit(span)).cast("long"),
+        def _bucket(c: str, i: int):
+            mn, mx = stats[f"mn_{i}"], stats[f"mx_{i}"]
+            span = max(1, mx - mn)
+            return F.least(
+                F.lit(65535),
+                ((_as_long(c) - F.lit(mn)) * 65535 / F.lit(span)).cast("long"),
+            )
+
+        z = _spread16(_bucket(cols[0], 0)).bitwiseOR(
+            F.shiftleft(_spread16(_bucket(cols[1], 1)), 1)
         )
-
-    z = _spread16(_bucket(cols[0], 0)).bitwiseOR(
-        F.shiftleft(_spread16(_bucket(cols[1], 1)), 1)
-    )
-    version = _new_version()
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.parquet(os.path.join(path, version))
-    )
-    _commit(path, version)
+        _commit_new_version(
+            df.withColumn("__z", z)
+            .repartitionByRange(n_files, "__z")
+            .sortWithinPartitions("__z")
+            .drop("__z"),
+            path,
+        )
 
 
 def refresh_rollup(
@@ -559,24 +620,29 @@ def refresh_rollup(
     the manifest-swap versioning (each refresh lands as one committed
     version) and an upstream batch id when replays are possible.
     """
-    n_delta = delta_agg.count()
-    n_keys = delta_agg.select(*key).distinct().count()
-    if n_delta != n_keys:
-        raise ValueError(
-            f"delta batch must be pre-aggregated to the rollup grain "
-            f"{key}: {n_delta} rows, {n_keys} distinct keys"
+    _check_key_unique(
+        delta_agg, key,
+        f"delta batch must be pre-aggregated to the rollup grain {key}",
+    )
+    # One lock across the read and the write: a refresh computed from a
+    # snapshot another writer has since replaced would drop its commit.
+    with table_lock(path):
+        target = read_table(spark, path)
+        t, d = target.alias("t"), delta_agg.alias("d")
+        touched = t.join(d, key, "inner")
+        refreshed = touched.select(
+            *[F.col(f"t.{k}").alias(k) for k in key],
+            *[
+                (F.col(f"t.{m}") + F.col(f"d.{m}")).alias(m)
+                for m in measures
+            ],
         )
-    target = read_table(spark, path)
-    t, d = target.alias("t"), delta_agg.alias("d")
-    touched = t.join(d, key, "inner")
-    refreshed = touched.select(
-        *[F.col(f"t.{k}").alias(k) for k in key],
-        *[
-            (F.col(f"t.{m}") + F.col(f"d.{m}")).alias(m)
-            for m in measures
-        ],
-    )
-    new_keys = d.join(t.select(*key), key, "left_anti").select(
-        *key, *measures
-    )
-    merge_upsert(spark, path, refreshed.unionByName(new_keys), key)
+        new_keys = d.join(t.select(*key), key, "left_anti").select(
+            *key, *measures
+        )
+        updates = refreshed.unionByName(new_keys)
+        # a target duplicated on the key fans the join out
+        _check_key_unique(
+            updates, key, f"update batch must be key-unique on {key}"
+        )
+        _commit_new_version(_upsert_plan(target, updates, key), path)

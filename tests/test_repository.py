@@ -73,11 +73,41 @@ def test_upsert_idempotent(spark, seeded_table):
     assert ok, why
 
 
+def _version_dirs(path):
+    return sorted(e for e in os.listdir(path) if e.startswith("v-"))
+
+
 def test_upsert_rejects_duplicate_update_keys(spark, seeded_table):
+    """A batch repeating a key — NULL keys compare equal, as under
+    DISTINCT — is rejected before anything is written: the manifest and
+    the version directories are left as they were."""
     before = repo.read_table(spark, seeded_table)
     dup = before.limit(1).unionAll(before.limit(1))
+    null_dup = before.limit(2).withColumn(
+        "c_custkey", F.lit(None).cast(before.schema["c_custkey"].dataType)
+    )
+    version, dirs = repo.current_version(seeded_table), _version_dirs(seeded_table)
+    for batch in (dup, null_dup):
+        with pytest.raises(ValueError, match="key-unique"):
+            repo.merge_upsert(spark, seeded_table, batch, ["c_custkey"])
+    assert repo.current_version(seeded_table) == version
+    assert _version_dirs(seeded_table) == dirs
+    # a single NULL key is unique
+    repo.merge_upsert(spark, seeded_table, null_dup.limit(1), ["c_custkey"])
+    assert repo.current_version(seeded_table) != version
+
+
+def test_scd2_rejects_duplicate_null_keys(spark, tmp_path):
+    path = str(tmp_path / "dim_scd2_nullkey")
+    repo.create_scd2_table(
+        _dim(spark, [(1, "alice", "gold")]), path, "2024-01-01 00:00:00"
+    )
+    version, dirs = repo.current_version(path), _version_dirs(path)
+    batch = _dim(spark, [(None, "x", "a"), (None, "y", "b")])
     with pytest.raises(ValueError, match="key-unique"):
-        repo.merge_upsert(spark, seeded_table, dup, ["c_custkey"])
+        repo.scd2_merge(spark, path, batch, ["k"], "2024-02-01 00:00:00")
+    assert repo.current_version(path) == version
+    assert _version_dirs(path) == dirs
 
 
 def test_concurrent_reader_snapshot_isolation(spark, seeded_table):
@@ -159,7 +189,26 @@ def test_legacy_plain_parquet_migrates(spark, sf_dir, tmp_path):
     assert got == "MIGRATED"
 
 
-def test_dynamic_partition_overwrite_isolation(spark, sf_dir, tmp_path):
+def test_dynamic_partition_overwrite_isolation(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Only the batch's partitions are replaced, by the per-write option:
+    the session-wide overwrite mode is never written, so another thread's
+    STATIC overwrite on the same session keeps its meaning."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    conf_key = "spark.sql.sources.partitionOverwriteMode"
+    writes = []
+    real_set = RuntimeConfig.set
+
+    def spy_set(self, key, value):
+        writes.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy_set)
+    mode_before = spark.conf.get(conf_key)
+    assert mode_before.upper() == "STATIC"
+
     path = str(tmp_path / "orders_by_status")
     orders = table(spark, sf_dir, "orders")
     repo.overwrite_partitions(spark, orders, path, ["o_orderstatus"])
@@ -182,6 +231,8 @@ def test_dynamic_partition_overwrite_isolation(spark, sf_dir, tmp_path):
     other_before = orders.filter(F.col("o_orderstatus") != "O").count()
     other_after = after.filter(F.col("o_orderstatus") != "O").count()
     assert other_before == other_after
+    assert conf_key not in writes
+    assert spark.conf.get(conf_key) == mode_before
 
 
 def _dim(spark, rows):
@@ -249,6 +300,126 @@ def test_scd2_null_attr_transitions(spark, tmp_path):
     t = repo.read_table(spark, path)
     assert t.count() == 3  # k=1 closed+new, k=2 untouched
     assert t.filter("k = 2").count() == 1
+
+
+def test_scd2_three_days_keeps_every_closed_row(spark, tmp_path):
+    """A key changed on two successive days leaves both closed rows
+    verbatim (the first one is history by day 3, carried through the
+    join alone) and exactly one open row."""
+    path = str(tmp_path / "dim_scd2_days")
+    repo.create_scd2_table(
+        _dim(spark, [(1, "alice", "gold"), (2, "bob", "silver")]),
+        path,
+        "2024-01-01 00:00:00",
+    )
+    days = [
+        ("2024-02-01 00:00:00", [(1, "alice", "platinum"), (2, "bob", "silver")]),
+        ("2024-03-01 00:00:00", [(1, "alice", "diamond"), (2, "bob", "silver")]),
+        ("2024-04-01 00:00:00", [(1, "alice", "diamond")]),
+    ]
+    for eff, rows in days:
+        repo.scd2_merge(spark, path, _dim(spark, rows), ["k"], eff)
+
+    got = {
+        (r.k, r.tier, str(r.valid_from)[:10],
+         None if r.valid_to is None else str(r.valid_to)[:10], r.is_current)
+        for r in repo.read_table(spark, path).collect()
+    }
+    assert got == {
+        (1, "gold", "2024-01-01", "2024-02-01", False),
+        (1, "platinum", "2024-02-01", "2024-03-01", False),
+        (1, "diamond", "2024-03-01", None, True),
+        (2, "silver", "2024-01-01", None, True),
+    }
+
+
+def _physical_nodes(df) -> list:
+    """Every node of ``df``'s physical plan (JVM objects)."""
+    nodes, stack = [], [df._jdf.queryExecution().sparkPlan()]
+    while stack:
+        node = stack.pop()
+        nodes.append(node)
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return nodes
+
+
+def test_scd2_plan_scans_target_once_with_one_join(spark, tmp_path):
+    """SCD-2 merge plan shape: exactly one join and exactly one file scan
+    of the target's version directory.  The plan must contain a real
+    FileScan, so the counts can't pass on a plan that hides its inputs."""
+    path = str(tmp_path / "dim_scd2_plan")
+    repo.create_scd2_table(
+        _dim(spark, [(1, "alice", "gold"), (2, "bob", "silver")]),
+        path,
+        "2024-01-01 00:00:00",
+    )
+    repo.scd2_merge(
+        spark, path, _dim(spark, [(1, "alice", "platinum")]), ["k"],
+        "2024-02-01 00:00:00",
+    )  # the target now holds a history row too
+    target = repo.read_table(spark, path)
+    merged = repo._scd2_plan(
+        target, _dim(spark, [(1, "alice", "diamond"), (3, "carol", "tin")]),
+        ["k"], "2024-03-01 00:00:00",
+    )
+    nodes = _physical_nodes(merged)
+    kinds = [n.getClass().getSimpleName() for n in nodes]
+    scans = [n for n, k in zip(nodes, kinds) if k == "FileSourceScanExec"]
+    assert scans, f"no FileScan in the plan: {kinds}"
+    vdir = os.path.join(path, repo.current_version(path))
+    scanned = [
+        str(s.relation().location().rootPaths().apply(0)) for s in scans
+    ]
+    assert sum(p.endswith(vdir) for p in scanned) == 1, scanned
+    joins = [k for k in kinds if k.endswith("JoinExec") or k == "CartesianProductExec"]
+    assert len(joins) == 1, kinds
+    assert merged.count() == 5  # history + closed + kept + 2 fresh
+
+
+def test_read_table_schema_matches_inference(spark, sf_dir, tmp_path):
+    """A version read through its pinned ``_SCHEMA`` has the column
+    names, order and types a footer-inferring read of the same
+    directory has — unpartitioned, string- and date-partitioned."""
+    cases = {
+        "plain": (table(spark, sf_dir, "customer"), None),
+        "by_status": (table(spark, sf_dir, "orders"), ["o_orderstatus"]),
+        "by_date": (
+            table(spark, sf_dir, "events").withColumn(
+                "event_date", F.to_date("ts")
+            ),
+            ["event_date"],
+        ),
+    }
+    for name, (df, part) in cases.items():
+        path = str(tmp_path / name)
+        repo.create_table(df, path, partition_by=part)
+        vdir = os.path.join(path, repo.current_version(path))
+        assert os.path.exists(os.path.join(vdir, repo.SCHEMA))
+        pinned = repo.read_table(spark, path)
+        inferred = spark.read.parquet(vdir)
+        assert pinned.dtypes == inferred.dtypes, name
+        assert pinned.count() == df.count(), name
+
+
+def test_version_without_schema_file_still_reads(spark, sf_dir, tmp_path):
+    """Versions written before ``_SCHEMA`` existed, and migrated legacy
+    directories, read through schema inference."""
+    path = str(tmp_path / "no_schema")
+    base = table(spark, sf_dir, "customer")
+    repo.create_table(base, path)
+    vdir = os.path.join(path, repo.current_version(path))
+    os.remove(os.path.join(vdir, repo.SCHEMA))
+    got = repo.read_table(spark, path)
+    assert got.dtypes == base.dtypes
+    assert got.count() == base.count()
+
+    legacy = str(tmp_path / "legacy_no_schema")
+    base.write.parquet(legacy)
+    repo._migrate_legacy(legacy)
+    vdir = os.path.join(legacy, repo.current_version(legacy))
+    assert not os.path.exists(os.path.join(vdir, repo.SCHEMA))
+    assert repo.read_table(spark, legacy).count() == base.count()
 
 
 def test_time_travel_reads_past_versions(spark, tmp_path):
@@ -383,6 +554,46 @@ def test_writer_lock_serializes_concurrent_upserts(spark, sf_dir, tmp_path):
     assert final.filter(F.col("c_custkey") == 1).first().c_name == "W1"
     assert final.filter(F.col("c_custkey") == 2).first().c_name == "W2"
     # lock released
+    assert not os.path.exists(os.path.join(path, repo.LOCK))
+
+
+def test_writer_lock_serializes_concurrent_scd2_merges(spark, tmp_path):
+    """Two SCD-2 merges on DISJOINT keys must both land: the target is
+    read under the writer lock, so the second merge starts from the
+    first one's commit instead of a stale snapshot."""
+    import threading
+
+    path = str(tmp_path / "locked_dim")
+    repo.create_scd2_table(
+        _dim(spark, [(1, "alice", "gold"), (2, "bob", "silver")]),
+        path,
+        "2024-01-01 00:00:00",
+    )
+    errs = []
+
+    def writer(rows):
+        try:
+            repo.scd2_merge(
+                spark, path, _dim(spark, rows), ["k"], "2024-02-01 00:00:00"
+            )
+        except Exception as exc:  # noqa: BLE001 — surfaced below
+            errs.append(exc)
+
+    threads = [
+        threading.Thread(target=writer, args=([(1, "alice", "platinum")],)),
+        threading.Thread(target=writer, args=([(2, "bob", "bronze")],)),
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errs, errs
+
+    final = repo.read_table(spark, path)
+    cur = {r.k: r.tier for r in final.filter("is_current").collect()}
+    assert cur == {1: "platinum", 2: "bronze"}
+    assert final.filter(~F.col("is_current")).count() == 2
     assert not os.path.exists(os.path.join(path, repo.LOCK))
 
 
