@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from polybot_data_etl_spark.plans.materialize import shared
+
 SCHEMAS: dict[str, T.StructType] = {
     "region": T.StructType(
         [
@@ -134,34 +136,13 @@ PARTITION_HINTS: dict[str, str] = {
 }
 
 
-# Scan-frame cache, keyed (application, sf_dir, table).  A DataFrame
-# is an immutable plan, so handing every consumer the same object is
-# semantically free — but building one costs a spark.read.parquet
-# footer read + schema analysis (~20-90 ms of Py4J round-trips), and
-# the 365-query suite makes ~550 table() calls.  The cache cut
-# plan_build_sec measurably (VERDICT r6 #6).  Keyed by applicationId
-# so a restarted session never sees another JVM's frames; cleared by
-# clear_table_cache() for tests that regenerate fixtures in place.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_TABLE_CACHE_LOCK = __import__("threading").Lock()
-_TABLE_CACHE_GEN = 0  # bumped by clear_table_cache(); see table()
-
-
-def clear_table_cache() -> None:
-    """Drop cached scan frames (fixture swaps / tests)."""
-    global _TABLE_CACHE_GEN
-    with _TABLE_CACHE_LOCK:
-        _TABLE_CACHE.clear()
-        # Invalidate in-flight builds too (ADVICE r7): table() reads
-        # parquet OUTSIDE the lock (so K parallel plan producers can
-        # build different tables concurrently), so a build that started
-        # before this clear() must not re-insert its now-stale frame
-        # after it.  The generation bump makes such inserts no-ops.
-        _TABLE_CACHE_GEN += 1
-
-
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table as a DataFrame (schema-on-file).
+
+    The scan frame is memoized per (session, sf_dir, table): a
+    DataFrame is an immutable plan, so every consumer can share one,
+    while building it costs a parquet footer read and schema analysis
+    (~20-90 ms of Py4J round-trips, ~550 calls per suite run).
 
     events.ts has shipped in two physical parquet layouts across fixture
     generations: TIMESTAMP(MICROS) (reads directly as TIMESTAMP_NTZ, the
@@ -176,52 +157,41 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, name)
-    with _TABLE_CACHE_LOCK:
-        gen = _TABLE_CACHE_GEN
-        cached = _TABLE_CACHE.get(key)
-        if cached is None:
-            # evict dead-session generations: a process that restarts
-            # SparkSessions would otherwise pin DataFrames holding
-            # Py4J refs into dead JVMs forever
-            for k in [k for k in _TABLE_CACHE if k[0] != app_id]:
-                del _TABLE_CACHE[k]
-    if cached is not None:
-        return cached
-    # Lazy data-dir validation (ADVICE r4): config.from_env only checks
-    # the fixture-dir env var when it is explicitly set, so a missing
-    # machine-default dir must still fail HERE with the variable named
-    # (config.SF_DIR_ENV), not as an opaque parquet read error deep in
-    # a plan.
-    import os
 
-    if not os.path.isdir(sf_dir):
-        from polybot_data_etl_spark.config import SF_DIR_ENV
+    def build() -> DataFrame:
+        # Lazy data-dir validation (ADVICE r4): config.from_env only
+        # checks the fixture-dir env var when it is explicitly set, so a
+        # missing machine-default dir must still fail HERE with the
+        # variable named (config.SF_DIR_ENV), not as an opaque parquet
+        # read error deep in a plan.
+        import os
 
-        raise ValueError(f"{SF_DIR_ENV}={sf_dir!r} is not a directory")
-    try:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    except Exception:
-        if name != "events":
-            raise
-        # External session + TIMESTAMP(NANOS) layout: the reader refuses
-        # ns timestamps unless nanosAsLong is on. Engine sessions set it
-        # at construction; cover the external-session path once here.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
-        df = df.withColumn(
-            "ts",
-            F.expr(
-                "timestampadd(MICROSECOND, ts div 1000,"
-                " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-            ),
-        )
-    with _TABLE_CACHE_LOCK:
-        if _TABLE_CACHE_GEN == gen:
-            _TABLE_CACHE[key] = df
-    return df
+        if not os.path.isdir(sf_dir):
+            from polybot_data_etl_spark.config import SF_DIR_ENV
+
+            raise ValueError(f"{SF_DIR_ENV}={sf_dir!r} is not a directory")
+        try:
+            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        except Exception:
+            if name != "events":
+                raise
+            # External session + TIMESTAMP(NANOS) layout: the reader
+            # refuses ns timestamps unless nanosAsLong is on. Engine
+            # sessions set it at construction; cover the external-session
+            # path once here.
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
+            df = df.withColumn(
+                "ts",
+                F.expr(
+                    "timestampadd(MICROSECOND, ts div 1000,"
+                    " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
+                ),
+            )
+        return df
+
+    return shared(spark, ("table", sf_dir, name), build)
 
 
 # Physical parquet layouts the engine's loaders understand, per column

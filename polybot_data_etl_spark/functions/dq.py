@@ -29,9 +29,9 @@ from polybot_data_etl_spark.plans.bounds import (
     bucket_index_sql,
     derived_bucket_count,
     grid_cuts,
-    memoized_bounds,
     probe_rows_and_grid,
 )
+from polybot_data_etl_spark.plans.materialize import shared
 from polybot_data_etl_spark.registry import register
 
 
@@ -1051,7 +1051,7 @@ def rle_profile_bucketed(
     # sort at ×100.  An explicit n_buckets (the pytest cross-checks)
     # keeps the direct sampling path.
     if n_buckets is None:
-        probe = memoized_bounds(
+        probe = shared(
             spark,
             ("rle_probe", sf_dir, GRID),
             lambda: probe_rows_and_grid(base, "l_orderkey"),
@@ -1060,7 +1060,7 @@ def rle_profile_bucketed(
         bounds = grid_cuts(probe, n_buckets)
     else:
         qs = [i / n_buckets for i in range(1, n_buckets)]
-        bounds = memoized_bounds(
+        bounds = shared(
             spark,
             ("rle_bounds", sf_dir, n_buckets),
             lambda: sorted(
@@ -1262,7 +1262,7 @@ def id_gaps_bucketed(
     # growing at ×100), explicit n_buckets keeps the direct sampling
     # path for the pytest cross-checks.
     if n_buckets is None:
-        probe = memoized_bounds(
+        probe = shared(
             spark,
             ("id_gap_probe", sf_dir, GRID),
             lambda: probe_rows_and_grid(e, "event_id"),
@@ -1271,7 +1271,7 @@ def id_gaps_bucketed(
         bounds = grid_cuts(probe, n_buckets)
     else:
         qs = [i / n_buckets for i in range(1, n_buckets)]
-        bounds = memoized_bounds(
+        bounds = shared(
             spark,
             ("id_gap_bounds", sf_dir, n_buckets),
             lambda: sorted(

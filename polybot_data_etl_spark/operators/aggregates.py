@@ -1106,15 +1106,15 @@ def q_agg_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_index_sql,
         derived_bucket_count,
         grid_cuts,
-        memoized_bounds,
         probe_rows_and_grid,
     )
+    from polybot_data_etl_spark.plans.materialize import shared
 
     li = table(spark, sf_dir, "lineitem")
     # SQL-text expressions (r13, guide §4): identical operator tree to
     # the Column-method form, ~⅓ the Py4J round-trips per build; the
-    # percentile probe joins the r12 bounds memo so repeat builds in a
-    # session issue no sampling job (bounds.py contract).
+    # percentile probe is session-memoized (plans/materialize.py), so
+    # repeat builds in a session issue no sampling job.
     pc = li.groupBy("l_partkey").agg(
         F.expr(
             "sum(try_cast(round(l_extendedprice * 100) AS BIGINT))"
@@ -1131,7 +1131,7 @@ def q_agg_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # derived from the sampled part count — 32 at fixture scale,
     # growing at ×100 (r13, guide §2.2); codegen'd O(log B) bucket
     # assignment replaces the O(B) interpreted HOF (bounds.py).
-    probe = memoized_bounds(
+    probe = shared(
         spark,
         ("abc_probe", sf_dir, GRID),
         lambda: probe_rows_and_grid(pc, "cents"),

@@ -21,64 +21,41 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from polybot_data_etl_spark.catalog import table
+from polybot_data_etl_spark.plans.materialize import shared
 from polybot_data_etl_spark.registry import register
 
 _PR_DAMPING = 0.85
 _PR_ITERS = 3
 
 
-# Memoized co-purchase edge set (round 8): SEVEN graph queries
-# (triangles, degree, assortativity, kcore, clustering, link_predict,
-# centralization) build the IDENTICAL distinct (a < b) part-pair frame
-# over %4-filtered lineitem — the same redundant-kernel shape the r7
-# MinHash signature memo collapsed for the dedup family.  One lazily
-# checkpointed frame per (application, sf_dir): the first consumer
-# materializes ~75 k edges executor-locally, every later graph query
-# reads the blocks.  Built via the basket-bounded explode² (the r6
-# link_predict rewrite — zero join shuffles, fan-out bounded by basket
-# size) rather than the O(rows²/orders) self-join.
-_EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
-_EDGES_CACHE_LOCK = __import__("threading").RLock()
-
-
-def clear_edges_cache() -> None:
-    """Drop memoized co-purchase edge frames (tests / fixture swaps)."""
-    with _EDGES_CACHE_LOCK:
-        _EDGES_CACHE.clear()
-
-
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct undirected co-purchase edges (a, b), a < b, over parts
-    with ``l_partkey % 4 == 0`` — the shared base graph of every
-    q_graph_* query.  Memoized per (application, sf_dir), lazily
-    checkpointed; build serialized so bench.py's plan-producer threads
-    cannot double-run the kernel."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _EDGES_CACHE_LOCK:
-        cached = _EDGES_CACHE.get(key)
-        if cached is None:
-            from polybot_data_etl_spark.functions.dedup import (
-                _evict_dead_sessions,
-            )
+    with ``l_partkey % 4 == 0`` — the shared base graph of SEVEN
+    q_graph_* queries (triangles, degree, assortativity, kcore,
+    clustering, link_predict, centralization), so it is one lazily
+    checkpointed session frame: the first consumer materializes ~75 k
+    edges, every later graph query reads the blocks.  Built via the
+    basket-bounded explode² (zero join shuffles, fan-out bounded by
+    basket size) rather than the O(rows²/orders) self-join."""
 
-            _evict_dead_sessions(_EDGES_CACHE, key[0])
-            li = (
-                table(spark, sf_dir, "lineitem")
-                .filter(F.col("l_partkey") % 4 == 0)
-                .select("l_orderkey", "l_partkey")
-            )
-            baskets = li.groupBy("l_orderkey").agg(
-                F.array_sort(F.collect_set("l_partkey")).alias("parts")
-            )
-            ea = baskets.select("parts", F.explode("parts").alias("a"))
-            cached = (
-                ea.select("a", F.explode("parts").alias("b"))
-                .filter(F.col("a") < F.col("b"))
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
-            _EDGES_CACHE[key] = cached
-        return cached
+    def build() -> DataFrame:
+        li = (
+            table(spark, sf_dir, "lineitem")
+            .filter(F.col("l_partkey") % 4 == 0)
+            .select("l_orderkey", "l_partkey")
+        )
+        baskets = li.groupBy("l_orderkey").agg(
+            F.array_sort(F.collect_set("l_partkey")).alias("parts")
+        )
+        ea = baskets.select("parts", F.explode("parts").alias("a"))
+        return (
+            ea.select("a", F.explode("parts").alias("b"))
+            .filter(F.col("a") < F.col("b"))
+            .distinct()
+            .localCheckpoint(eager=False)
+        )
+
+    return shared(spark, ("copurchase_edges", sf_dir), build)
 
 
 def _pagerank_oracle() -> str:

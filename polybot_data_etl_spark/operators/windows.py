@@ -22,9 +22,9 @@ from polybot_data_etl_spark.plans.bounds import (
     bucket_index_sql,
     derived_bucket_count,
     grid_cuts,
-    memoized_bounds,
     probe_rows_and_grid,
 )
+from polybot_data_etl_spark.plans.materialize import shared
 from polybot_data_etl_spark.registry import register
 
 
@@ -284,7 +284,7 @@ def q_win_dist_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # job counts the rows and the bucket count derives from it (guide
     # §2.2 — 32 at fixture scale, growing at ×100); the bucket
     # assignment is the codegen'd O(log B) ladder (bounds.py).
-    probe = memoized_bounds(
+    probe = shared(
         spark,
         ("win_dist_probe", sf_dir, GRID),
         lambda: probe_rows_and_grid(c, "c_acctbal"),
@@ -536,7 +536,7 @@ def q_win_weighted_median_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11 §wrong #4).  r13: the same job counts rows and the bucket
     # count derives from it (guide §2.2); codegen'd O(log B) bucket
     # assignment (bounds.py).
-    probe = memoized_bounds(
+    probe = shared(
         spark,
         ("wmedian_probe", sf_dir, GRID),
         lambda: probe_rows_and_grid(base, "l_quantity"),

@@ -42,9 +42,9 @@ def make_fixtures(spark, src: str, out: str, n_rows: int) -> None:
 
 def run_audit(spark, fixture_dir: str, label: str) -> dict[str, str]:
     from polybot_data_etl_spark import registry
-    from polybot_data_etl_spark.functions.dedup import clear_pair_cache
+    from polybot_data_etl_spark.plans import materialize
 
-    clear_pair_cache()
+    materialize.clear()
     ok, errs = 0, {}
     for name, fn in registry.queries().items():
         try:
@@ -54,7 +54,7 @@ def run_audit(spark, fixture_dir: str, label: str) -> dict[str, str]:
             ok += 1
         except Exception as exc:  # noqa: BLE001 — audit, report all
             errs[name] = f"{type(exc).__name__}: {str(exc)[:160]}"
-    clear_pair_cache()
+    materialize.clear()
     print(f"[{label}] OK {ok} / {ok + len(errs)}")
     for k, v in sorted(errs.items()):
         print(f" [{label}] ERR", k, v)

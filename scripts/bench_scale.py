@@ -67,9 +67,9 @@ def default_query_set(qs) -> list[str]:
 
 
 def run_dir(spark, qs, names, sf_dir: str) -> dict:
-    from polybot_data_etl_spark.functions.dedup import clear_pair_cache
+    from polybot_data_etl_spark.plans import materialize
 
-    clear_pair_cache()  # memoized pair frames must not leak across dirs
+    materialize.clear()  # memoized pair frames must not leak across dirs
     walls: dict[str, float] = {}
     errors: dict[str, str] = {}
     sampler = StealSampler().start()
@@ -86,7 +86,7 @@ def run_dir(spark, qs, names, sf_dir: str) -> dict:
             print(f"  {name} FAILED: {errors[name]}", file=sys.stderr)
     total = round(time.time() - t0, 3)
     steal = sampler.stop()
-    clear_pair_cache()
+    materialize.clear()
     out = {
         "sf_dir": sf_dir,
         "total_sec": total,

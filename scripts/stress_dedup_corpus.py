@@ -110,12 +110,13 @@ def main() -> int:
 
     from polybot_data_etl_spark.functions import dedup as D
     from polybot_data_etl_spark.functions.text import q_dedup_minhash
+    from polybot_data_etl_spark.plans import materialize
 
     for n in args.docs:
         work = tempfile.mkdtemp(prefix=f"dedup_corpus_{n}_")
         try:
             synth_documents(spark, n, work)
-            D.clear_pair_cache()
+            materialize.clear()
             print(f"docs={n:,}")
             timed(
                 "minhash LSH pairs",

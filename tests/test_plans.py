@@ -11,20 +11,18 @@ cartesian product.
 from __future__ import annotations
 
 import pytest
+from plan_checks import plan_text, plan_through_cuts, require_scans
 
 from polybot_data_etl_spark import registry
 
 
 def plan_of(spark, sf_dir, name: str) -> str:
-    df = registry.queries()[name](spark, sf_dir)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    return df._jdf.queryExecution().explainString(mode)
+    return plan_text(registry.queries()[name](spark, sf_dir))
 
 
 def test_scan_project_prunes_columns(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "q_scan_project")
+    require_scans(plan)
     # projection-only query: read schema is exactly the 3 selected columns
     assert "ReadSchema: struct<l_orderkey:bigint,l_partkey:bigint,l_quantity:double>" in plan
     assert "Exchange" not in plan  # narrow: no shuffle at all
@@ -32,6 +30,7 @@ def test_scan_project_prunes_columns(spark, sf_dir):
 
 def test_filter_range_pushes_predicates(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "q_filter_range")
+    require_scans(plan)
     assert "PushedFilters:" in plan
     assert "GreaterThanOrEqual(l_shipdate" in plan
     assert "LessThan(l_quantity,24.0)" in plan
@@ -81,25 +80,11 @@ def test_no_cartesian_products(spark, sf_dir, name):
 
     Memoized queries (r7) return a localCheckpoint wrapper whose plan
     collapses to `Scan ExistingRDD` — inspecting that would make this
-    test vacuous, so those names resolve to their underlying plan
-    builders instead."""
-    from polybot_data_etl_spark.functions import dedup as _dedup
-    from polybot_data_etl_spark.functions import text as _text
-
-    builders = {
-        "q_dedup_minhash": lambda s, d: _text.minhash_pairs(
-            __import__(
-                "polybot_data_etl_spark.catalog", fromlist=["table"]
-            ).table(s, d, "documents")
-        ),
-        "q_dedup_embed": _dedup._build_embed_pairs,
-    }
-    if name in builders:
-        df = builders[name](spark, sf_dir)
-        mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
+    test vacuous, so those names are inspected through the cuts."""
+    if name in ("q_dedup_minhash", "q_dedup_embed"):
+        plan = plan_through_cuts(
+            lambda: registry.queries()[name](spark, sf_dir)
         )
-        plan = df._jdf.queryExecution().explainString(mode)
     else:
         plan = plan_of(spark, sf_dir, name)
     # prove the inspected plan is the REAL candidate-generation tree,
@@ -527,6 +512,7 @@ def test_time_pruned_scan_pushes_ts_range(spark, sf_dir):
     """The ts-range predicate must reach the parquet scan (PushedFilters
     row-group skipping), and only the three needed columns are read."""
     plan = plan_of(spark, sf_dir, "q_scan_time_pruned")
+    require_scans(plan)
     assert "PushedFilters:" in plan
     pushed = plan.split("PushedFilters:")[1][:300]
     assert "GreaterThanOrEqual(ts" in pushed and "LessThan(ts" in pushed
@@ -652,10 +638,8 @@ def test_nested_struct_field_pruning_reaches_scan(spark, sf_dir, tmp_path):
         ).alias("profile"),
     ).write.parquet(path)
     got = spark.read.parquet(path).select("c_custkey", "profile.bal")
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    plan = got._jdf.queryExecution().explainString(mode)
+    plan = plan_text(got)
+    require_scans(plan)
     assert "ReadSchema: struct<c_custkey:bigint,profile:struct<bal:double>>" in plan
     assert "name" not in plan.split("ReadSchema")[1][:120]
 
@@ -716,6 +700,7 @@ def test_card_single_expand_agg(spark, sf_dir):
     """GROUPING SETS must compile to one Expand + hash agg, not a
     union of four scans."""
     plan = plan_of(spark, sf_dir, "q_pipeline_card")
+    require_scans(plan)
     # one scan in the plan TREE (formatted mode repeats the node name in
     # the detail section, hence the "+-" prefix)
     assert plan.count("+- Scan parquet") == 1
@@ -752,7 +737,7 @@ def test_benford_window_only_on_digit_frame(spark, sf_dir):
     assert "partial_count" in plan
     # window input comes from the aggregate, so the exchange feeding it
     # is a SinglePartition over ≤9 rows — the fact scan never single-partitions
-    assert "Scan parquet" in plan
+    require_scans(plan)
 
 
 def test_cuped_no_fact_windows(spark, sf_dir):
@@ -786,6 +771,7 @@ def test_skyline_aggregates_before_frontier_window(spark, sf_dir):
 
 def test_reservoir_windows_are_sharded_then_merged(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "q_sample_reservoir")
+    require_scans(plan)
     # pass 1 partitions by (lang, shard-of-32) — no whole-language sort
     assert "pmod" in plan
     # two window stages: shard-local top-k, then the per-lang merge of
@@ -854,11 +840,7 @@ def test_winsorized_approx_variant_is_sketch_partial(spark, sf_dir):
 
     from polybot_data_etl_spark.operators.aggregates import winsorized_means
 
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    df = winsorized_means(spark, sf_dir, method="approx")
-    plan = df._jdf.queryExecution().explainString(mode)
+    plan = plan_text(winsorized_means(spark, sf_dir, method="approx"))
     assert "partial_approx_percentile" in plan  # map-side sketch merge
     # no EXACT percentile aggregate anywhere in the approx plan
     assert not re.search(r"(?<!approx_)percentile\(", plan)
@@ -956,10 +938,16 @@ def test_agg_abc_shares_one_revenue_frame(spark, sf_dir):
     once at the percentile probe; the four downstream consumers reuse
     it, so the FINAL plan contains no lineitem parquet scan at all
     (a scan reappearing means the shared subtree was un-cut and the
-    shuffle runs per consumer again)."""
+    shuffle runs per consumer again).  Through the cuts, the same
+    builder does scan lineitem, so the absence is not vacuous."""
     plan = plan_of(spark, sf_dir, "q_agg_abc")
     assert "Scan parquet" not in plan
     assert "Scan ExistingRDD" in plan
+    uncut = plan_through_cuts(
+        lambda: registry.queries()["q_agg_abc"](spark, sf_dir)
+    )
+    require_scans(uncut)
+    assert "lineitem.parquet" in uncut
 
 
 def test_minhash_eval_found_side_is_probe_bounded(spark, sf_dir):
@@ -969,27 +957,27 @@ def test_minhash_eval_found_side_is_probe_bounded(spark, sf_dir):
     kernel over the probe subset, never the corpus (a corpus scan →
     100-doc kernel at 100 TB).  Banding is per-doc deterministic, so
     probe×probe LSH pairs are identical either way (the oracle keeps
-    the filtered-full-corpus formulation as the independent witness)."""
+    the filtered-full-corpus formulation as the independent witness).
+
+    The signature and pair frames sit behind localCheckpoint cuts, so
+    the plan is inspected through the cuts."""
     import re
 
-    from polybot_data_etl_spark.functions.dedup import clear_pair_cache
-
-    clear_pair_cache()  # a memoized corpus pair frame would hide scans
-    try:
-        plan = plan_of(spark, sf_dir, "q_dedup_minhash_eval")
-        scans = re.findall(r"^\(\d+\) Scan parquet", plan, re.M)
-        assert scans, "expected parquet scans in the plan"
-        probe_pushed = [
-            ln
-            for ln in plan.splitlines()
-            if "PushedFilters" in ln and "LessThan(doc_id,100)" in ln
-        ]
-        assert len(probe_pushed) == len(scans), (
-            f"{len(scans)} parquet scans but only {len(probe_pushed)}"
-            f" carry the probe pushdown:\n{plan[:2000]}"
-        )
-    finally:
-        clear_pair_cache()
+    plan = plan_through_cuts(
+        lambda: registry.queries()["q_dedup_minhash_eval"](spark, sf_dir)
+    )
+    require_scans(plan)
+    scans = re.findall(r"^\(\d+\) Scan parquet", plan, re.M)
+    assert scans, "expected parquet scans in the plan"
+    probe_pushed = [
+        ln
+        for ln in plan.splitlines()
+        if "PushedFilters" in ln and "LessThan(doc_id,100)" in ln
+    ]
+    assert len(probe_pushed) == len(scans), (
+        f"{len(scans)} parquet scans but only {len(probe_pushed)}"
+        f" carry the probe pushdown:\n{plan[:2000]}"
+    )
 
 
 # Registered queries whose optimized plan contains an UNPARTITIONED

@@ -110,12 +110,12 @@ def test_simhash_combinatorial_equals_registered(spark, sf_dir):
     3-subset, so after the same verify the pair set must be
     IDENTICAL."""
     from polybot_data_etl_spark.functions.dedup import (
-        clear_pair_cache,
         q_dedup_simhash,
         simhash_pairs_classic,
     )
+    from polybot_data_etl_spark.plans import materialize
 
-    clear_pair_cache()
+    materialize.clear()
     a = sorted(tuple(r) for r in q_dedup_simhash(spark, sf_dir).collect())
     b = sorted(
         tuple(r) for r in simhash_pairs_classic(spark, sf_dir).collect()
@@ -173,12 +173,12 @@ def test_embed_pairs_scaled_bits_subset_with_recall_floor(spark, sf_dir):
 
     from polybot_data_etl_spark.functions.dedup import (
         _build_embed_pairs,
-        clear_pair_cache,
         hyperplane_buckets,
     )
     from polybot_data_etl_spark.catalog import table
+    from polybot_data_etl_spark.plans import materialize
 
-    clear_pair_cache()
+    materialize.clear()
     reg = {
         (r.a_id, r.b_id, r.sim)
         for r in _build_embed_pairs(spark, sf_dir).collect()

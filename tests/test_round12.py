@@ -24,12 +24,12 @@ def test_flipped_plan_bounds_memoized(spark, sf_dir):
     build-time quantile pass (measured 4-7 s cold at sf0.1 across the
     four) runs once per (session, sf_dir, n_buckets) and later plan
     constructions re-use the cut-point literals."""
-    from polybot_data_etl_spark.plans.bounds import clear_bounds_cache
+    from polybot_data_etl_spark.plans import materialize
     from polybot_data_etl_spark.registry import queries
 
     q = queries()
     names = ("q_dq_rle", "q_dq_id_gaps", "q_agg_rfm", "q_win_dist")
-    clear_bounds_cache()
+    materialize.clear()
     for name in names:
         cold = _job_count(spark, lambda: q[name](spark, sf_dir))
         assert cold >= 1, (name, "first build must run the sampling job")
@@ -40,28 +40,24 @@ def test_flipped_plan_bounds_memoized(spark, sf_dir):
 def test_bounds_memo_keys_isolate(spark, sf_dir, tmp_path):
     """Different (sf_dir, n_buckets) keys must not share cut points:
     a fixture swap or a bucket-count change re-samples; the same key
-    re-uses.  Also pins the dead-session eviction sweep."""
-    from polybot_data_etl_spark.plans import bounds as B
+    re-uses.  (Dead-session eviction: tests/test_materialize.py.)"""
+    from polybot_data_etl_spark.plans import materialize
 
-    B.clear_bounds_cache()
+    materialize.clear()
     calls = {"n": 0}
 
     def compute():
         calls["n"] += 1
         return [1.0, 2.0]
 
-    v1 = B.memoized_bounds(spark, ("k", str(tmp_path), 32), compute)
-    v2 = B.memoized_bounds(spark, ("k", str(tmp_path), 32), compute)
+    v1 = materialize.shared(spark, ("k", str(tmp_path), 32), compute)
+    v2 = materialize.shared(spark, ("k", str(tmp_path), 32), compute)
     assert v1 == v2 == [1.0, 2.0] and calls["n"] == 1
-    B.memoized_bounds(spark, ("k", str(tmp_path), 16), compute)
+    materialize.shared(spark, ("k", str(tmp_path), 16), compute)
     assert calls["n"] == 2
-    # a foreign (dead) session's entry is swept on the next insert
-    with B._LOCK:
-        B._CACHE[("dead-app", "k", "x", 8)] = [9.9]
-    B.memoized_bounds(spark, ("k2", str(tmp_path), 32), compute)
-    with B._LOCK:
-        assert ("dead-app", "k", "x", 8) not in B._CACHE
-    B.clear_bounds_cache()
+    materialize.shared(spark, ("k", str(tmp_path / "swapped"), 32), compute)
+    assert calls["n"] == 3
+    materialize.clear()
 
 
 def test_flipped_plans_still_match_demoted_after_memo(spark, sf_dir):
@@ -89,12 +85,12 @@ def test_embed_scaled_registered_is_8bit_build(spark, sf_dir):
     `_build_embed_pairs` the round-11 dial pinned: subset of the 4-bit
     output with the recall floor, now as a driver-checkable query."""
     from polybot_data_etl_spark.functions.dedup import (
-        clear_pair_cache,
         q_dedup_embed,
         q_dedup_embed_scaled,
     )
+    from polybot_data_etl_spark.plans import materialize
 
-    clear_pair_cache()
+    materialize.clear()
     scaled = {
         (r.a_id, r.b_id, r.sim)
         for r in q_dedup_embed_scaled(spark, sf_dir).collect()
@@ -143,13 +139,11 @@ def test_simhash_registered_plan_is_combinatorial(spark, sf_dir):
     """Plan-shape pin for the r12 flip: the registered q_dedup_simhash
     explodes 20 band keys (C(6,3) block subsets), not 4 — the 2¹⁶→~2³²
     band-space move that kills the measured ×67.6 crowding term."""
+    from plan_checks import plan_text
+
     from polybot_data_etl_spark.registry import queries
 
-    df = queries()["q_dedup_simhash"](spark, sf_dir)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    plan = df._jdf.queryExecution().explainString(mode)
+    plan = plan_text(queries()["q_dedup_simhash"](spark, sf_dir))
     # the classic form's 4-element posexplode array carries bare band
     # columns; the combinatorial form's 20-element array is built from
     # shifted block arithmetic
@@ -270,13 +264,13 @@ def test_simhash_wide_twin_precision_and_sharper_candidates(spark, sf_dir):
         _SIMHASH_BITS,
         _SIMHASH_WIDE_BANDS,
         _WIDE_HAMMING_MAX,
-        clear_pair_cache,
         q_dedup_simhash,
         simhash_bands,
         simhash_pairs_wide,
     )
+    from polybot_data_etl_spark.plans import materialize
 
-    clear_pair_cache()
+    materialize.clear()
     wide = {
         (r.a_id, r.b_id): r.hamming
         for r in simhash_pairs_wide(spark, sf_dir).collect()
@@ -376,17 +370,14 @@ def test_fused_bucketed_plans_are_single_scan(spark, sf_dir):
     """r12 fusion pins: the rle / id_gaps registered plans must keep
     their fused one-scan shape (the pre-r12 forms scanned the fact
     table 2-3x; a revert reads as a silent 2x scan regression)."""
+    from plan_checks import plan_text, require_scans
+
     from polybot_data_etl_spark.registry import queries
 
     qs = queries()
     for name in ("q_dq_rle", "q_dq_id_gaps"):
-        df = qs[name](spark, sf_dir)
-        mode = (
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        plan = df._jdf.queryExecution().explainString(mode)
+        plan = plan_text(qs[name](spark, sf_dir))
+        require_scans(plan)
         # formatted explain prints each scan twice (tree line + the
         # numbered detail block), so ONE physical scan == 2 mentions
         assert plan.count("Scan parquet") == 2, (

@@ -37,6 +37,26 @@ def test_bucket_index_sql_matches_hof(spark):
     )
     for row in ddf.collect():
         assert row["ladder"] == row["hof"], row
+    # non-finite cuts render as valid SQL literals; Spark orders
+    # -Infinity < finite < +Infinity < NaN, and NaN <= only NaN
+    inf, nan = float("inf"), float("nan")
+
+    def hof_lit(c: float) -> str:
+        text = {inf: "'Infinity'", -inf: "'-Infinity'"}.get(c, repr(c))
+        return f"CAST({text if c == c else repr('NaN')} AS DOUBLE)"
+
+    for ncuts in ([-inf, 0.5, inf], [0.5, 7.5, nan], [-inf, 1.25, inf, nan]):
+        narr = ", ".join(hof_lit(c) for c in ncuts)
+        nrows = spark.createDataFrame(
+            [(v,) for v in (-inf, -1.0, 0.5, 3.0, inf, nan, None)], "v double"
+        ).selectExpr(
+            "v",
+            f"size(filter(array({narr}), x -> x <= v)) AS hof",
+            bucket_index_sql(ncuts, "v") + " AS ladder",
+        )
+        for row in nrows.collect():
+            hof = max(row["hof"], 0)  # size() is -1/0 on null per legacy conf
+            assert row["ladder"] == hof, (ncuts, row)
 
 
 def test_derived_bucket_count_floor_and_growth():
@@ -143,7 +163,9 @@ def test_basket_tiled_pairs_bit_identical(spark):
         )
     )
     assert got_small == want_small
-    assert sorted(map(tuple, small_only.collect())) != []
+    # max_basket <= chunk takes the exchange-free route for EVERY basket
+    # (no size filter), so it must emit the full naive multiset
+    assert sorted(map(tuple, small_only.collect())) == want
 
 
 def test_pagerank_fold_equals_unfolded(spark, sf_dir):

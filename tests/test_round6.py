@@ -94,10 +94,10 @@ def test_empty_corpus_does_not_crash_fixed_queries(spark, sf_dir, tmp_path):
     empty-partition posture."""
     from polybot_data_etl_spark.catalog import TABLES
     from polybot_data_etl_spark.functions.dedup import (
-        clear_pair_cache,
         q_dedup_capture_recapture,
     )
     from polybot_data_etl_spark.functions.vectors import q_embed_pca
+    from polybot_data_etl_spark.plans import materialize
 
     empty = str(tmp_path / "empty_sf")
     for t in TABLES:
@@ -106,7 +106,7 @@ def test_empty_corpus_does_not_crash_fixed_queries(spark, sf_dir, tmp_path):
         ).parquet(f"{empty}/{t}.parquet")
 
     assert q_embed_pca(spark, empty).collect() == []
-    clear_pair_cache()
+    materialize.clear()
     try:
         rows = q_dedup_capture_recapture(spark, empty).collect()
         assert len(rows) == 1
@@ -114,7 +114,7 @@ def test_empty_corpus_does_not_crash_fixed_queries(spark, sf_dir, tmp_path):
         assert (r.n_minhash, r.n_ngram, r.n_both) == (0, 0, 0)
         assert r.coverage_minhash is None and r.coverage_ngram is None
     finally:
-        clear_pair_cache()  # don't leak the empty-dir pair frames
+        materialize.clear()  # don't leak the empty-dir pair frames
 
 
 def test_singleton_groups_yield_null_not_crash(spark, sf_dir, tmp_path):
@@ -177,7 +177,7 @@ def test_null_cells_never_crash_fixed_families(spark, sf_dir, tmp_path):
 
     from polybot_data_etl_spark import registry
     from polybot_data_etl_spark.catalog import TABLES
-    from polybot_data_etl_spark.functions.dedup import clear_pair_cache
+    from polybot_data_etl_spark.plans import materialize
 
     out = str(tmp_path / "nulled")
     keep = {"doc_id", "vec_id", "event_id"}
@@ -212,7 +212,7 @@ def test_null_cells_never_crash_fixed_families(spark, sf_dir, tmp_path):
         "q_ts_ewma",              # empty collect_list window
         "q_dq_cardinality_shift",  # zero median denominator
     ]
-    clear_pair_cache()
+    materialize.clear()
     try:
         for name in representative:
             # must not raise; row counts are free to differ (NULL rows
@@ -221,7 +221,7 @@ def test_null_cells_never_crash_fixed_families(spark, sf_dir, tmp_path):
                 "overwrite"
             ).format("noop").save()
     finally:
-        clear_pair_cache()
+        materialize.clear()
 
 
 def test_nan_cells_never_crash_fixed_families(spark, sf_dir, tmp_path):
