@@ -239,12 +239,6 @@ def check_fixture_layouts(sf_dir: str) -> None:
         )
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for the Spark SQL surface."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def assert_schema(df: DataFrame, name: str) -> None:
     """Assert a loaded table matches the pinned schema (test helper)."""
     expected = SCHEMAS[name]

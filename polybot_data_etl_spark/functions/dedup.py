@@ -61,13 +61,6 @@ _HYPER_MIX = 2_654_435_761   # Knuth multiplicative-hash constant
 # portable primitives (Spark side; each has an exact DuckDB twin in the
 # oracle SQL below)
 
-def tokens(col: str = "text") -> Column:
-    """Distinct non-empty whitespace tokens of lower(text)."""
-    return F.array_distinct(
-        F.filter(F.split(F.lower(F.col(col)), " "), lambda t: t != "")
-    )
-
-
 def char_hash(t: Column) -> Column:
     """Polynomial rolling hash over the characters of a token, mod 1e9+7.
 
@@ -86,14 +79,12 @@ _CHAR_HASH_SQL = (
     " (a, x) -> (a * 31 + x) % 1000000007)"
 )
 
-_TOKENS_SQL = (
-    "list_distinct(list_filter(string_split(lower(text), ' '), t -> t <> ''))"
-)
-
 # SimHash votes are term-frequency weighted (classic Charikar): every
 # occurrence votes, so docs drawn from a shared vocabulary still get
 # distinct fingerprints (distinct-token voting collapses them).
-_ALL_TOKENS_SQL = "list_filter(string_split(lower(text), ' '), t -> t <> '')"
+_TOKEN_OCCURRENCES_SQL = (
+    "list_filter(string_split(lower(text), ' '), t -> t <> '')"
+)
 
 
 def all_tokens(col: str = "text") -> Column:
@@ -336,10 +327,9 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # SimHash
 
-def simhash_bands(d: DataFrame, n_bands: int = _SIMHASH_BANDS) -> DataFrame:
-    """(doc_id, b0..b{n-1}): a 16·n_bands-bit SimHash split into
-    n_bands×16-bit band values (default 4 → the 64-bit contract; 8 →
-    the 128-bit width twin, SURVEY r12).
+def simhash_bands(d: DataFrame) -> DataFrame:
+    """(doc_id, b0..b3): the 64-bit SimHash split into 4×16-bit band
+    values.
 
     Bit k (k = 16*band + i) is the sign of Σ_token-occurrences ±1 where
     a token votes +1 iff ``(char_hash(token) * (2k+3)) % p`` is odd — a
@@ -362,7 +352,7 @@ def simhash_bands(d: DataFrame, n_bands: int = _SIMHASH_BANDS) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    n_bits = n_bands * _SIMHASH_BITS
+    n_bits = _SIMHASH_BANDS * _SIMHASH_BITS
     mult = (2 * np.arange(n_bits, dtype=np.int64) + 3)
     memo: dict = {}
 
@@ -411,7 +401,7 @@ def simhash_bands(d: DataFrame, n_bands: int = _SIMHASH_BANDS) -> DataFrame:
             np.add.at(accs, doc_pos, V[codes])
         bits = accs > 0
         out = {"doc_id": pdf["doc_id"].to_numpy()}
-        for b in range(n_bands):
+        for b in range(_SIMHASH_BANDS):
             band = np.zeros(len(pdf), dtype=np.int64)
             for i in range(_SIMHASH_BITS):
                 band += bits[:, _SIMHASH_BITS * b + i].astype(np.int64) << i
@@ -422,7 +412,9 @@ def simhash_bands(d: DataFrame, n_bands: int = _SIMHASH_BANDS) -> DataFrame:
         F.col("text").isNotNull()  # NULL text = absent, never a crash
     ).mapInPandas(
         fingerprint,
-        ", ".join(["doc_id long"] + [f"b{b} long" for b in range(n_bands)]),
+        ", ".join(
+            ["doc_id long"] + [f"b{b} long" for b in range(_SIMHASH_BANDS)]
+        ),
     )
 
 
@@ -439,14 +431,12 @@ def _simhash_bands_sql() -> str:
         SELECT doc_id, {bands}
         FROM (
             SELECT doc_id,
-                   list_transform({_ALL_TOKENS_SQL},
+                   list_transform({_TOKEN_OCCURRENCES_SQL},
                                   t -> {_CHAR_HASH_SQL.format(t='t')}) AS hlist
             FROM documents
         )"""
 
 
-_SIMHASH_WIDE_BANDS = 8      # 8 x 16 = the 128-bit width twin (r12)
-_WIDE_HAMMING_MAX = 7        # ~ the 64-bit <=3 similarity cut at 2x width
 _SIMHASH_BLOCK_SIZES = (11, 11, 11, 11, 10, 10)   # 6 blocks over 64 bits
 _SIMHASH_BLOCK_AGREE = 3                           # Hamming<=3 corrupts <=3 blocks
 
@@ -466,7 +456,7 @@ def _simhash_combinatorial_keys(fp64: Column | None = None) -> list:
     :func:`simhash_bands` — correct but an ~8x larger expression tree,
     since Catalyst does not CSE the reassembly across the 20 keys
     (measured r12: the inlined form's Generate node alone was a
-    multi-hundred-node tree; the registered plan now projects ``fp0``
+    multi-hundred-node tree; the registered plan now projects ``fp``
     once and passes it here, guide §2.3 "project before the
     exchange")."""
     from itertools import combinations
@@ -497,53 +487,41 @@ def _simhash_combinatorial_keys(fp64: Column | None = None) -> list:
     ]
 
 
-def _simhash_pack(n_cols: int) -> list:
-    """Packed-fingerprint projection: the 16-bit band columns b0..b{n-1}
-    of :func:`simhash_bands` packed 4-per-long into fp0[, fp1] — bit
-    16·c + i of the fingerprint lands at bit (16·c + i) mod 64 of word
-    (c // 4).  One long instead of four halves the posting payload and
-    collapses every downstream band/Hamming expression onto a single
-    column (r12 expression-tree fix; see _simhash_combinatorial_keys)."""
-    n_packed = (n_cols + 3) // 4
-    return [
-        sum(
-            F.shiftleft(F.col(f"b{4 * p + i}"), _SIMHASH_BITS * i)
-            for i in range(min(4, n_cols - 4 * p))
-        ).alias(f"fp{p}")
-        for p in range(n_packed)
-    ]
+def _simhash_pack() -> Column:
+    """Packed-fingerprint projection: the 16-bit band columns b0..b3 of
+    :func:`simhash_bands` packed into one long ``fp`` (column b{c} lands
+    at bits 16·c..16·c+15).  One long instead of four halves the posting
+    payload and collapses every downstream band/Hamming expression onto
+    a single column (r12 expression-tree fix; see
+    _simhash_combinatorial_keys)."""
+    return sum(
+        F.shiftleft(F.col(f"b{i}"), _SIMHASH_BITS * i)
+        for i in range(_SIMHASH_BANDS)
+    ).alias("fp")
 
 
-def _simhash_scheme_keys(scheme: str, n_cols: int) -> list:
-    """Band-key expressions over the packed fp0[, fp1] columns, in the
+def _simhash_scheme_keys(scheme: str) -> list:
+    """Band-key expressions over the packed ``fp`` column, in the
     scheme's canonical band order.  Values are bit-identical to the
-    historical per-column forms (classic: band m == column b{m}; wide:
-    band m == b{2m} + (b{2m+1} << 16)); only the source columns
-    changed, so posting buckets — and therefore candidate and verified
-    pair sets — are unchanged."""
-    if scheme == "classic":  # band m == 16-bit slice m of fp0
+    historical per-column forms (classic: band m == column b{m}); only
+    the source column changed, so posting buckets — and therefore
+    candidate and verified pair sets — are unchanged."""
+    if scheme == "classic":  # band m == 16-bit slice m of fp
         return [
-            F.shiftrightunsigned(F.col("fp0"), _SIMHASH_BITS * m).bitwiseAND(
+            F.shiftrightunsigned(F.col("fp"), _SIMHASH_BITS * m).bitwiseAND(
                 F.lit((1 << _SIMHASH_BITS) - 1)
             )
             for m in range(_SIMHASH_BANDS)
         ]
-    if scheme == "wide":  # band m == 32-bit slice m of (fp0, fp1)
-        return [
-            F.shiftrightunsigned(
-                F.col(f"fp{m // 2}"), 32 * (m % 2)
-            ).bitwiseAND(F.lit((1 << 32) - 1))
-            for m in range(n_cols // 2)
-        ]
     if scheme == "comb":
-        return _simhash_combinatorial_keys(F.col("fp0"))
+        return _simhash_combinatorial_keys(F.col("fp"))
     raise ValueError(f"unknown simhash banding scheme {scheme!r}")
 
 
-def _simhash_min_band(xcols: list, scheme: str):
+def _simhash_min_band(x: Column, scheme: str):
     """Index of the FIRST band on which two fingerprint records agree
     (same enumeration order as the scheme's band keys), computed from
-    the pair's PROJECTED xor words x0[, x1] (x{p} = a.fp{p} ^ b.fp{p}).
+    the pair's PROJECTED xor word x = a.fp ^ b.fp.
 
     Multi-band LSH emits every colliding pair once PER agreeing band —
     an exact duplicate (Hamming 0) agrees on all bands, so the naive
@@ -559,44 +537,34 @@ def _simhash_min_band(xcols: list, scheme: str):
     Shape matters twice over: a direct 20-way when-chain re-derives
     the 64-bit xor under every combo term — an expression tree big
     enough to fall out of whole-stage codegen (measured 6.7 s for
-    674 k rows).  This form reads the xor WORDS (projected once by
+    674 k rows).  This form reads the xor WORD (projected once by
     _simhash_verify_pairs — r12: the previous version re-packed both
     fingerprints from their b-columns and re-xored under every block
     term), derives one block-agreement mask, and maps it through a
     2^n_blocks-entry literal lookup array built driver-side — a
     handful of shifts and one element_at per row.
 
-    Schemes: ``classic`` (4 bands == 16-bit slices of x0), ``comb``
-    (20 bands == 3-subsets of 6 blocks of x0), ``wide`` (4 bands ==
-    32-bit slices of (x0, x1)).
+    Schemes: ``classic`` (4 bands == 16-bit slices of x), ``comb``
+    (20 bands == 3-subsets of 6 blocks of x).
     """
     from itertools import combinations
 
     if scheme == "classic":  # band m == 16-bit slice m
         agree = [
-            F.shiftrightunsigned(xcols[0], _SIMHASH_BITS * m).bitwiseAND(
+            F.shiftrightunsigned(x, _SIMHASH_BITS * m).bitwiseAND(
                 F.lit((1 << _SIMHASH_BITS) - 1)
             )
             == 0
             for m in range(_SIMHASH_BANDS)
         ]
         combos = [(m,) for m in range(_SIMHASH_BANDS)]
-    elif scheme == "wide":  # band m == 32-bit slice m of (x0, x1)
-        agree = [
-            F.shiftrightunsigned(xcols[m // 2], 32 * (m % 2)).bitwiseAND(
-                F.lit((1 << 32) - 1)
-            )
-            == 0
-            for m in range(_SIMHASH_WIDE_BANDS // 2)
-        ]
-        combos = [(m,) for m in range(_SIMHASH_WIDE_BANDS // 2)]
     elif scheme == "comb":  # band c == 3-subset c of the 6 blocks
         starts = tuple(
             sum(_SIMHASH_BLOCK_SIZES[:i])
             for i in range(len(_SIMHASH_BLOCK_SIZES))
         )
         agree = [
-            F.shiftrightunsigned(xcols[0], starts[m]).bitwiseAND(
+            F.shiftrightunsigned(x, starts[m]).bitwiseAND(
                 F.lit((1 << _SIMHASH_BLOCK_SIZES[m]) - 1)
             )
             == 0
@@ -626,15 +594,9 @@ def _simhash_min_band(xcols: list, scheme: str):
     return F.element_at(lookup, mask_col + 1)
 
 
-def _simhash_verify_pairs(
-    fp: DataFrame,
-    scheme: str,
-    n_cols: int = _SIMHASH_BANDS,
-    hamming_max: int = _HAMMING_MAX,
-) -> DataFrame:
+def _simhash_verify_pairs(fp: DataFrame, scheme: str) -> DataFrame:
     """Banded-LSH candidate generation + Hamming verify shared by the
-    registered combinatorial plan, the classic 4x16 witness, and the
-    128-bit width twin.
+    registered combinatorial plan and the classic 4x16 witness.
 
     Candidates come from per-(band, value) posting lists — ONE shuffle
     keyed by the band value, pairs generated inside each posting row by
@@ -648,25 +610,20 @@ def _simhash_verify_pairs(
     no pair-stream re-shuffle.
 
     r12 expression-tree fix (guide §2.3/§7.2): the fingerprint is
-    packed 4 band-columns-per-long ONCE (fp0[, fp1] — the posting
-    payload drops from 1+n_cols to 1+⌈n_cols/4⌉ longs), every band key
-    reads the packed word instead of re-assembling it, and the pair
-    stage projects the xor words x{p} = a.fp{p}^b.fp{p} once for both
-    the Hamming sum and the min-band mask.  The previous inlined form
-    repeated the 4-shiftleft packing under each of the 20 Generate
-    keys and 6 more times under the min-band filter — a plan whose
-    codegen/compile alone measurably dominated the query at sf0.1
-    (6.2-7.2 s in-suite vs ~1.2 s warm re-run)."""
-    n_packed = (n_cols + 3) // 4
-    fpk = fp.select("doc_id", *_simhash_pack(n_cols))
-    rec = F.struct(
-        "doc_id", *[F.col(f"fp{p}") for p in range(n_packed)]
-    ).alias("rec")
-    banded = fpk.select(
-        rec,
-        F.posexplode(
-            F.array(*_simhash_scheme_keys(scheme, n_cols))
-        ).alias("band", "value"),
+    packed into one long ONCE (``fp`` — the posting payload drops from
+    5 longs to 2), every band key reads the packed word instead of
+    re-assembling it, and the pair stage projects the xor word
+    x = a.fp ^ b.fp once for both the Hamming count and the min-band
+    mask.  The previous inlined form repeated the 4-shiftleft packing
+    under each of the 20 Generate keys and 6 more times under the
+    min-band filter — a plan whose codegen/compile alone measurably
+    dominated the query at sf0.1 (6.2-7.2 s in-suite vs ~1.2 s warm
+    re-run)."""
+    banded = fp.select("doc_id", _simhash_pack()).select(
+        F.struct("doc_id", "fp").alias("rec"),
+        F.posexplode(F.array(*_simhash_scheme_keys(scheme))).alias(
+            "band", "value"
+        ),
     )
     postings = (
         banded.groupBy("band", "value")
@@ -681,20 +638,16 @@ def _simhash_verify_pairs(
             "band",
             F.col("a.doc_id").alias("a_id"),
             F.col("b.doc_id").alias("b_id"),
-            *[
-                F.col(f"a.fp{p}").bitwiseXOR(F.col(f"b.fp{p}")).alias(f"x{p}")
-                for p in range(n_packed)
-            ],
+            F.col("a.fp").bitwiseXOR(F.col("b.fp")).alias("x"),
         )
     )
-    xcols = [F.col(f"x{p}") for p in range(n_packed)]
-    ham = sum(F.bit_count(x) for x in xcols).cast("long")
+    x = F.col("x")
     # verify FIRST (bit_count over the projected xor — cheapest), then
     # keep each surviving pair only at its minimal agreeing band
     return (
-        pairs.withColumn("hamming", ham)
-        .filter(F.col("hamming") <= hamming_max)
-        .filter(F.col("band") == _simhash_min_band(xcols, scheme))
+        pairs.withColumn("hamming", F.bit_count(x).cast("long"))
+        .filter(F.col("hamming") <= _HAMMING_MAX)
+        .filter(F.col("band") == _simhash_min_band(x, scheme))
         .select("a_id", "b_id", "hamming")
     )
 
@@ -760,50 +713,6 @@ def simhash_pairs_classic(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality pin is the registered plan's exactness proof."""
     fp = simhash_bands(table(spark, sf_dir, "documents"))
     return _simhash_verify_pairs(fp, "classic")
-
-
-def simhash_pairs_wide(
-    spark: SparkSession, sf_dir: str, hamming_max: int = _WIDE_HAMMING_MAX
-) -> DataFrame:
-    """The 128-bit WIDTH twin (test-only, VERDICT r11 #5): the same
-    Charikar vote formula extended to bits 0..127 (8x16-bit columns),
-    banded 4x32 (band m == the injective packing of columns 2m, 2m+1),
-    Hamming <= 7 verify — ~the 64-bit <=3 similarity cut at twice the
-    width (3.5/64 per-bit error rate).
-
-    What the width buys — MEASURED (r12, sf0.001): the twin is a
-    PRECISION knob, not a recall knob.  Of the 448 pairs the 64-bit
-    <=3 contract emits, 356 (~80%) have second-half Hamming >= 8 —
-    their true per-bit disagreement rate is moderate (~0.1) and the
-    64-bit <=3 hit was a Binomial lucky draw (P(Binom(64, .1) <= 3) is
-    small but the fixture has many moderately-similar pairs to draw
-    from); two pairs even have IDENTICAL first 64 bits while differing
-    on >= 8 of the second 64.  Doubling the width halves the per-bit
-    variance, so the <=7/128 cut (the same nominal rate as 3.5/64)
-    rejects those artifacts while keeping every truly-near pair:
-    text-identical dups have Hamming 0/128, collide on all four bands,
-    and are pinned always-emitted (tests/test_round12.py).  Candidate
-    mass also sharpens: a 32-bit band agreement implies far deeper
-    agreement than a 16-bit one, so the correlated near-miss candidate
-    mass (Hamming 4-6/64 content overlap — 188 k of the 243 k sf0.1
-    candidates under any complete 64-bit banding) drops (pinned).
-
-    Because the emitted SET genuinely differs from the 64-bit contract
-    (deliberately — the rejected 80% are the false-positive tail),
-    this is a NEW semantic: a survey row of its own if ever
-    registered, never a flip of q_dedup_simhash.  Recall caveat at the
-    margin: 4x32 banding is pigeonhole-complete only for <= 3 of 128,
-    so pairs at 4..7/128 with errors spread across all four bands can
-    be missed (28 of 448 measured at sf0.001)."""
-    fp = simhash_bands(
-        table(spark, sf_dir, "documents"), _SIMHASH_WIDE_BANDS
-    )
-    return _simhash_verify_pairs(
-        fp,
-        "wide",
-        n_cols=_SIMHASH_WIDE_BANDS,
-        hamming_max=hamming_max,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1149,7 +1058,6 @@ def q_dedup_embed_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # dedup cluster assignment (connected components over near-dup pairs)
 
-_CC_MAX_ITERS = 20
 # Edge-count ceiling for the driver-local union-find fast path; above
 # it the distributed min-label supersteps run.  100k 16-byte pairs is a
 # ~2 MB driver pull — far under any broadcast threshold.
@@ -1188,10 +1096,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     conduct, not a collect of data.  Lineage is truncated per step with
     localCheckpoint so plan depth stays O(1).  Near-dup clusters are
     dense (band collisions link most members pairwise), so convergence
-    takes ~2-3 supersteps; a worst-case long-path graph would switch to
-    the alternating large-star/small-star formulation (O(log n)
-    supersteps, same join shapes).  Oracle: DuckDB recursive CTE over
-    the identical pair graph.
+    takes ~2-3 supersteps; a long-path graph takes ⌈diameter/2⌉, and
+    the loop has no iteration cap, so it always reaches the fixpoint.
+    Oracle: DuckDB recursive CTE over the identical pair graph.
     """
     d = table(spark, sf_dir, "documents")
     nodes = d.select(F.col("doc_id").alias("node"))
@@ -1205,9 +1112,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def connected_components(
-    nodes: DataFrame, pairs: DataFrame, max_iters: int = _CC_MAX_ITERS
-) -> DataFrame:
+def connected_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     """Min-label connected components over an undirected pair graph.
 
     ``nodes``: one column ``node`` (every vertex, including isolated
@@ -1219,25 +1124,14 @@ def connected_components(
     that appear in an edge.  Isolated nodes (the overwhelming majority
     of a corpus under near-dup thresholds) never enter the iteration;
     they are labeled by a single left join at the end."""
-    labels = component_labels(pairs, max_iters=max_iters)
+    labels = component_labels(pairs)
     return nodes.join(labels, "node", "left").select(
         "node", F.coalesce("lbl", "node").alias("lbl")
     )
 
 
-def component_labels(
-    pairs: DataFrame,
-    max_iters: int = _CC_MAX_ITERS,
-    algorithm: str = "propagation",
-    local_threshold: int = _CC_LOCAL_EDGES,
-) -> DataFrame:
+def component_labels(pairs: DataFrame) -> DataFrame:
     """Min-label propagation restricted to edge-endpoint nodes.
-
-    ``algorithm="star"`` switches to the alternating large-star/
-    small-star formulation (component_labels_star) — O(log n)-ish
-    supersteps on ANY graph shape vs propagation's O(diameter).
-    Near-dup graphs are dense (2-3 supersteps), so propagation is the
-    default; the star fallback is for pathological long-path graphs.
 
     Returns (node, lbl) for every node with degree ≥ 1 only.  Each
     superstep shuffles O(|E|) rows — the dup-pair graph, not the corpus
@@ -1247,13 +1141,9 @@ def component_labels(
 
     Execution contract: EAGER.  The pair frame is materialized at call
     time (localCheckpoint + size probe) to pick the local-vs-superstep
-    path; below ``local_threshold`` edges the returned frame is a
+    path; up to ``_CC_LOCAL_EDGES`` edges the returned frame is a
     driver-materialized createDataFrame.  Callers must pass exactly the
     two edge-endpoint columns (``a_id``, ``b_id``); extras raise."""
-    if algorithm == "star":
-        return component_labels_star(pairs, max_iters=max_iters)
-    if algorithm != "propagation":
-        raise ValueError(f"unknown CC algorithm: {algorithm!r}")
     # Size-adaptive local fast path: near-dup pair graphs are orders of
     # magnitude smaller than the corpus, and below _CC_LOCAL_EDGES the
     # distributed supersteps pay 4-6 jobs of fixed overhead to shuffle
@@ -1274,8 +1164,8 @@ def component_labels(
     # eager-checkpoint + count + toPandas tripled the fixed job
     # overhead on the common small-graph path).
     pairs = pairs.select("a_id", "b_id").localCheckpoint(eager=False)
-    pdf = pairs.limit(local_threshold + 1).toPandas()
-    if len(pdf) <= local_threshold:
+    pdf = pairs.limit(_CC_LOCAL_EDGES + 1).toPandas()
+    if len(pdf) <= _CC_LOCAL_EDGES:
         # name-addressed, not positional — a reordered projection must
         # not silently swap edge endpoints (ADVICE r4)
         parent: dict[int, int] = {}
@@ -1327,8 +1217,12 @@ def component_labels(
             ).alias("lbl"),
         )
 
+    # Labels are integers that only ever decrease, so the label sum
+    # strictly drops until the fixpoint: loop until it stops changing
+    # (⌈diameter/2⌉ supersteps) — a fixed cap would silently return
+    # wrong labels on long paths.
     prev_sum = labels.agg(F.sum("lbl")).collect()[0][0]
-    for _ in range(max_iters):
+    while True:
         # TWO hops per checkpointed superstep: the checkpoint + scalar
         # convergence collect dominate wall time at toy scale (fixed job
         # overhead ≫ the O(|E|) shuffle), so batching two propagations
@@ -1342,101 +1236,6 @@ def component_labels(
             break
         prev_sum = new_sum
     return labels
-
-
-def component_labels_star(
-    pairs: DataFrame, max_iters: int = _CC_MAX_ITERS
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (the
-    MapReduce CC construction of Kiveris et al., "Connected Components
-    in MapReduce and Beyond", SoCC 2014) — the documented fallback for
-    pathological long-path graphs where min-label propagation needs
-    O(diameter) supersteps.
-
-    Each round rewrites the undirected edge set with two neighborhood-
-    min operations (each one groupBy + join over O(|E|) rows):
-      * large-star(u): every neighbor v > u re-attaches to
-        m = min(Γ(u) ∪ {u});
-      * small-star(u): every neighbor v ≤ u (and u itself) attaches
-        to m.
-    The edge set converges to a star forest rooted at each component's
-    min node in O(log² n) rounds (O(log n) observed); labels are then
-    read straight off the star edges.  Returns (node, lbl) for
-    degree-≥1 nodes only, exactly like component_labels."""
-    # canonical undirected orientation (u < v); self-pairs drop out
-    e = (
-        pairs.select(
-            F.least("a_id", "b_id").alias("u"),
-            F.greatest("a_id", "b_id").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def _sym(edges: DataFrame) -> DataFrame:
-        return edges.unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-
-    def _canon(emitted: DataFrame) -> DataFrame:
-        return (
-            emitted.select(
-                F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def _checksum(edges: DataFrame):
-        row = edges.agg(
-            F.count("*").alias("n"),
-            # xor-fold, not sum: ANSI mode makes a long sum of 2^63-range
-            # hashes an overflow error
-            F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    prev = _checksum(e)
-    for _ in range(max_iters):
-        # large-star: neighbors v > u hook onto u's neighborhood min
-        sym = _sym(e)
-        nmin = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        large = _canon(
-            sym.filter(F.col("v") > F.col("u"))
-            .join(nmin, "u")
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-        )
-        # small-star: neighbors v ≤ u (plus u) hook onto the min
-        sym = _sym(large)
-        nmin = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        small = _canon(
-            sym.filter(F.col("v") < F.col("u"))
-            .join(nmin, "u")
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .unionByName(
-                nmin.select(F.col("u").alias("a"), F.col("m").alias("b"))
-            )
-        ).localCheckpoint(eager=True)
-        cur = _checksum(small)
-        e = small
-        if cur == prev:
-            break
-        prev = cur
-    # fixpoint = star forest with canonical edges (root, v): the u side
-    # is the component min.  Roots label themselves.
-    return (
-        e.select(F.col("v").alias("node"), F.col("u").alias("lbl"))
-        .unionByName(
-            e.select(F.col("u").alias("node"), F.col("u").alias("lbl"))
-        )
-        .groupBy("node")
-        .agg(F.min("lbl").alias("lbl"))
-    )
 
 
 @register(

@@ -1045,9 +1045,6 @@ def q_agg_boxplot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ABC_BUCKETS = 32
-
-
 @register(
     "q_agg_abc",
     oracle="""

@@ -25,49 +25,37 @@ def test_survey_and_registry_agree():
 
 def test_driver_window_priority_invariants():
     """The driver records only the first ~50 enumeration-order queries
-    per round.  Three tiers: (0) the never-driver-recorded evidence
-    debt (VERDICT §Next-round #1 each round) must enumerate first;
-    (1) queries newly registered this round yield to them; (2) already-
-    recorded queries go last.  Cheap before expensive within each tier
-    so a time-capped driver run records the maximum number of rows."""
+    per round.  Three tiers: (0) names whose latest driver row is red
+    must re-record first; (1) the never-driver-recorded evidence debt
+    comes next; (2) already-recorded names go last, oldest evidence
+    first.  Cheap before expensive within each tier so a time-capped
+    driver run records the maximum number of rows."""
     from polybot_data_etl_spark import registry
 
     names = list(registry.queries())
     tiers = [registry._tier(n) for n in names]
     assert tiers == sorted(tiers), "tier order must be monotonic"
-    # Fixed-after-red requeues (tier -1) lead everything: their last
-    # driver row was an ERROR and the fix needs a green row this round.
-    assert names[: len(registry._REQUEUED_RED)] == sorted(
-        registry._REQUEUED_RED,
-        key=lambda n: registry._cost_class(n),
-    ) or set(names[: len(registry._REQUEUED_RED)]) == registry._REQUEUED_RED
-    assert not (registry._REQUEUED_RED & registry._RECORDED)
-    tier0 = [n for n in names if registry._tier(n) == 0]
-    # The tier-0 set is exactly "registered minus recorded minus new
-    # minus requeued": derive the expectation from the same constants
-    # instead of a magic number (ADVICE r4) so a legitimate recording
-    # update can't break the invariant — only genuine drift (a query in
-    # both _RECORDED and _NEW_THIS_ROUND, or a recorded name no longer
-    # registered) does.
-    expected_tier0 = (
-        set(names)
-        - registry._RECORDED
-        - registry._NEW_THIS_ROUND
-        - registry._REQUEUED_RED
+    # each name's status comes from its latest round: green and red
+    # are disjoint, and red names lead everything
+    assert not (registry._DRIVER_GREEN & registry._DRIVER_RED)
+    red = registry._DRIVER_RED & set(names)
+    assert set(names[: len(red)]) == red
+    assert {n for n in names if registry._tier(n) == 1} == (
+        set(names) - registry._DRIVER_GREEN - registry._DRIVER_RED
     )
-    assert set(tier0) == expected_tier0
-    assert not (registry._RECORDED & registry._NEW_THIS_ROUND)
-    assert registry._RECORDED <= set(names), (
-        "recorded set names queries that are no longer registered: "
-        f"{sorted(registry._RECORDED - set(names))}"
-    )
-    for n in names:
-        if registry._tier(n) == 0:
-            assert n not in registry._NEW_THIS_ROUND
-    # cheap-before-expensive within each tier
-    for t in (-1, 0, 1, 2):
-        costs = [registry._cost_class(n) for n in names if registry._tier(n) == t]
-        assert costs == sorted(costs)
+    for t in (0, 1, 2):
+        in_tier = [n for n in names if registry._tier(n) == t]
+        costs = [registry._cost_class(n) for n in in_tier]
+        assert costs == sorted(costs), "cheap before expensive"
+        if t == 2:
+            # within a cost class, oldest driver evidence first
+            for c in (0, 1):
+                rounds = [
+                    registry._EVIDENCE_ROUND[n]
+                    for n in in_tier
+                    if registry._cost_class(n) == c
+                ]
+                assert rounds == sorted(rounds)
 
 
 def test_every_registered_query_has_driver_hashable_schema(spark, sf_dir):
@@ -95,14 +83,17 @@ def test_every_registered_query_has_driver_hashable_schema(spark, sf_dir):
 
 
 def test_recorded_set_folds_in_every_committed_driver_green():
-    """Regression pin for VERDICT r7 §What's wrong #3: round 7's driver
-    window re-sampled round 6's EXACT 50 queries because the r6 greens
-    were never folded into ``registry._RECORDED``, so the priority head
-    never advanced and zero evidence debt drained.  This test makes a
-    forgotten fold-in a hard failure: every green row (hash pass, or
-    declared rows-only pass) in any committed CORRECTNESS_r*.json must
-    be in ``_RECORDED``, so no enumeration-head slot is ever wasted on
-    a query that already has driver evidence."""
+    """Regression pin for VERDICT r7 §What's wrong #3 and r8 #1: a
+    query that already has driver evidence must never take an
+    enumeration-head slot from one that has none.  Greens are read
+    here straight from the committed CORRECTNESS_r*.json records (hash
+    pass, or declared rows-only pass), independently of the registry's
+    own derivation.  Once the never-recorded debt drops below the
+    window size the head MUST back-fill with prior greens, so the
+    invariant is that a prior green never DISPLACES outstanding debt:
+      (a) every never-recorded query precedes every prior-green, and
+      (b) the head contains ALL never-recorded queries when debt<50
+          (else the first 50 slots are all debt)."""
     import glob
     import json
 
@@ -119,36 +110,19 @@ def test_recorded_set_folds_in_every_committed_driver_green():
             ):
                 greens.add(name)
     greens &= set(registry.queries())  # ignore since-renamed keys, if any
-    # A latest-red name is deliberately excluded from _RECORDED even if
-    # an older round once recorded it green — it must requeue at the
-    # head (green→red→re-record is the intended flow, ADVICE r8 #2).
-    missing = sorted(greens - registry._RECORDED - registry._REQUEUED_RED)
-    assert not missing, (
-        "driver-green queries missing from registry._RECORDED — fold "
-        f"them in or the next driver window re-records them: {missing}"
-    )
-    # And the flip side of the same waste — reformulated for the
-    # endgame (VERDICT r8 #1): once the never-recorded debt drops below
-    # the window size, the head MUST back-fill with prior greens, so
-    # "no green in head-50" is unsatisfiable.  The real invariant is
-    # that a prior green never DISPLACES outstanding debt:
-    #   (a) every never-recorded query precedes every prior-green, and
-    #   (b) the head contains ALL never-recorded queries when debt<50
-    #       (else the first 50 slots are all debt).
+    red = registry._DRIVER_RED
     names = list(registry.queries())
-    debt = [n for n in names if n not in greens and n not in registry._REQUEUED_RED]
+    debt = [n for n in names if n not in greens and n not in red]
     if debt:
         last_debt_pos = names.index(debt[-1])
         displaced = [
-            n
-            for n in names[:last_debt_pos]
-            if n in greens and n not in registry._REQUEUED_RED
+            n for n in names[:last_debt_pos] if n in greens and n not in red
         ]
         assert not displaced, (
             "prior-green queries enumerate BEFORE outstanding evidence "
             f"debt (they would waste driver window slots): {displaced}"
         )
-    head = set(names[: max(50, len(registry._REQUEUED_RED) + len(debt))])
+    head = set(names[: max(50, len(red) + len(debt))])
     not_in_head = [n for n in debt[:50] if n not in head]
     assert not not_in_head, (
         "never-recorded queries pushed out of the driver's recording "
@@ -168,8 +142,8 @@ def test_endgame_head_backfill_is_not_stale():
     from polybot_data_etl_spark import registry
 
     names = list(registry.queries())
-    greens = registry._RECORDED
-    debt = [n for n in names if n not in greens and n not in registry._REQUEUED_RED]
+    greens, red = registry._DRIVER_GREEN, registry._DRIVER_RED
+    debt = [n for n in names if n not in greens and n not in red]
 
     def displaced(order: list[str]) -> list[str]:
         d = [n for n in order if n in debt]
@@ -188,37 +162,75 @@ def test_endgame_head_backfill_is_not_stale():
         assert displaced(bad) != [], "the displacement check must catch a green ahead of debt"
 
 
-def test_new_this_round_is_staleness_proof():
-    """Regression pin for VERDICT r9 #1 (the SECOND endgame coverage
-    red): a STATIC tier-1 set goes stale by design the moment the
-    driver records its member — r6's `{"q_win_weighted_median_scaled"}`
-    intersected ``_RECORDED`` after the r9 fold-in and
-    ``assert not (_RECORDED & _NEW_THIS_ROUND)`` became unsatisfiable.
-    From round 10 the effective set is DERIVED
-    (declared − recorded − requeued), so the all-recorded +
-    nonempty-declaration endgame — the exact state that fired in r8 AND
-    r9 — is structurally green: simulate it and assert the derivation
-    keeps the tiers disjoint with no hand edit."""
-    from polybot_data_etl_spark import registry
+def _module_private_defs(tree) -> dict:
+    """Module-level private names (``_x``, not dunders) bound by a def,
+    class or assignment, each with the statements that bind it."""
+    import ast
 
-    # The derivation is exactly declared − recorded − requeued.
-    assert registry._NEW_THIS_ROUND == (
-        registry._NEW_THIS_ROUND_DECLARED
-        - registry._RECORDED
-        - registry._REQUEUED_RED
-    )
-    # Simulate the endgame fold-in on a SYNTHETIC nonempty declaration
-    # (round 11+ declares nothing — the M10 end-state — so the live set
-    # can no longer exercise the stale-set class; the formula is what's
-    # under test, not the current declaration).  Pick two recorded
-    # names as the "declared" batch: the exact all-recorded +
-    # nonempty-declaration state that fired in r8 AND r9.
-    declared = frozenset(sorted(registry._RECORDED)[:2])
-    assert declared, "the fleet always has recorded names to simulate with"
-    recorded_after_fold = registry._RECORDED | declared
-    derived = declared - recorded_after_fold - registry._REQUEUED_RED
-    assert not (recorded_after_fold & derived), (
-        "the derived tier-1 set must vanish when its members are "
-        "recorded — a nonempty intersection is the r8/r9 red re-firing"
-    )
-    assert derived == frozenset()
+    out: dict = {}
+    for st in tree.body:
+        if isinstance(
+            st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        ):
+            names = [st.name]
+        elif isinstance(st, (ast.Assign, ast.AnnAssign)):
+            targets = st.targets if isinstance(st, ast.Assign) else [st.target]
+            names = [
+                n.id for t in targets for n in ast.walk(t)
+                if isinstance(n, ast.Name)
+            ]
+        else:
+            continue
+        for name in names:
+            if name.startswith("_") and not name.startswith("__"):
+                out.setdefault(name, []).append(st)
+    return out
+
+
+def _names_read(tree, skip=()) -> set:
+    """Every name ``tree`` reads (a loaded name or attribute, or an
+    imported name), ignoring the nodes inside the ``skip`` statements."""
+    import ast
+
+    skipped = {id(n) for st in skip for n in ast.walk(st)}
+    read: set = set()
+    for n in ast.walk(tree):
+        if id(n) in skipped:
+            continue
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+            read.add(n.id)
+        elif isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Load):
+            read.add(n.attr)
+        elif isinstance(n, ast.ImportFrom):
+            read.update(a.name for a in n.names)
+    return read
+
+
+def test_no_dead_private_module_names():
+    """Dead-name lint: every module-level private name of the package
+    must be read somewhere in the package or in tests/, outside its own
+    definition — a constant, helper or class nothing reads is dormant
+    code."""
+    import ast
+    import glob
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(root, "polybot_data_etl_spark")
+    files = glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)
+    tests = os.path.join(root, "tests")
+    files += glob.glob(os.path.join(tests, "**", "*.py"), recursive=True)
+    trees = {}
+    for path in files:
+        with open(path) as f:
+            trees[path] = ast.parse(f.read(), path)
+    read = {path: _names_read(tree) for path, tree in trees.items()}
+    dead = []
+    for path, tree in trees.items():
+        if not path.startswith(pkg + os.sep):
+            continue
+        for name, defs in _module_private_defs(tree).items():
+            if any(name in r for p, r in read.items() if p != path):
+                continue
+            if name not in _names_read(tree, skip=defs):
+                dead.append(f"{os.path.relpath(path, root)}: {name}")
+    assert not dead, "unread private module names:\n" + "\n".join(sorted(dead))

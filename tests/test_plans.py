@@ -20,6 +20,12 @@ def plan_of(spark, sf_dir, name: str) -> str:
     return plan_text(registry.queries()[name](spark, sf_dir))
 
 
+def plan_behind_cuts(spark, sf_dir, name: str) -> str:
+    """The plan of a query whose inputs are checkpointed or memoized
+    frames, with those cuts made identities (see plan_through_cuts)."""
+    return plan_through_cuts(lambda: registry.queries()[name](spark, sf_dir))
+
+
 def test_scan_project_prunes_columns(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "q_scan_project")
     require_scans(plan)
@@ -42,6 +48,7 @@ def test_filter_range_pushes_predicates(spark, sf_dir):
 
 def test_broadcast_join_is_broadcast(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "q_join_broadcast")
+    require_scans(plan)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -81,14 +88,13 @@ def test_no_cartesian_products(spark, sf_dir, name):
     Memoized queries (r7) return a localCheckpoint wrapper whose plan
     collapses to `Scan ExistingRDD` — inspecting that would make this
     test vacuous, so those names are inspected through the cuts."""
-    if name in ("q_dedup_minhash", "q_dedup_embed"):
-        plan = plan_through_cuts(
-            lambda: registry.queries()[name](spark, sf_dir)
-        )
+    if name in ("q_dedup_minhash", "q_dedup_embed", "q_dedup_ngram"):
+        plan = plan_behind_cuts(spark, sf_dir, name)
     else:
         plan = plan_of(spark, sf_dir, name)
     # prove the inspected plan is the REAL candidate-generation tree,
     # not a collapsed checkpoint scan (vacuous-test guard)
+    require_scans(plan)
     assert "HashAggregate" in plan or "Join" in plan, name
     assert "CartesianProduct" not in plan, name
     assert "BroadcastNestedLoopJoin" not in plan, name
@@ -99,6 +105,7 @@ def test_whole_stage_codegen_on_hot_paths(spark, sf_dir):
     # no exchange, no Python
     for name in ("q_text_keyword_score", "q_text_fingerprint", "q_fn_math"):
         plan = plan_of(spark, sf_dir, name)
+        require_scans(plan)
         # formatted mode marks codegen'd operators with "[codegen id : N]"
         assert "codegen id" in plan, name
         assert "Exchange" not in plan, name
@@ -132,6 +139,7 @@ def test_win_weighted_median_scaled_no_global_data_sort(spark, sf_dir):
     partitioned window runs over the ≤96-row bucket summary, and both
     re-attach joins are broadcast equi-joins (no NLJ)."""
     plan = plan_of(spark, sf_dir, "q_win_weighted_median_scaled")
+    require_scans(plan)
     assert "windowspecdefinition(l_returnflag" in plan
     # the full-data window's exchange hashes on (flag, bkt)
     import re
@@ -191,12 +199,14 @@ def test_dedup_embed_verify_join_not_hint_forced(spark, sf_dir):
 def test_embed_quantize_is_narrow(spark, sf_dir):
     """Quantization is a per-row projection: no shuffle, no Python."""
     plan = plan_of(spark, sf_dir, "q_embed_quantize")
+    require_scans(plan)
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_tfidf_partial_aggs_no_cartesian(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "q_text_tfidf")
+    require_scans(plan)
     assert "partial_count" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -314,6 +324,7 @@ def test_contamination_equi_join_no_pairs(spark, sf_dir):
     broadcast) and two-phase-aggregates the hit counts — never a
     doc-pair product."""
     plan = plan_of(spark, sf_dir, "q_text_contamination")
+    require_scans(plan)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "Join" in plan
@@ -337,6 +348,7 @@ def test_salted_join_joins_on_salt(spark, sf_dir):
     """The salted join's equi-keys include the salt column, and the
     fact side is not broadcast."""
     plan = plan_of(spark, sf_dir, "q_join_salted")
+    require_scans(plan)
     assert "__salt" in plan
     assert "CartesianProduct" not in plan
 
@@ -389,6 +401,7 @@ def test_chunk_is_narrow_generate(spark, sf_dir):
     """Chunking is a per-row Generate + codegen substring — zero
     shuffles, no join, no Python."""
     plan = plan_of(spark, sf_dir, "q_text_chunk")
+    require_scans(plan)
     assert "Generate" in plan
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -400,6 +413,7 @@ def test_split_histogram_mode_partial_aggs(spark, sf_dir):
     for name in ("q_split_assign", "q_agg_histogram", "q_agg_mode",
                  "q_ts_anomaly", "q_cdc_compact"):
         plan = plan_of(spark, sf_dir, name)
+        require_scans(plan)
         assert "HashAggregate" in plan or "Window" in plan, name
         assert "CartesianProduct" not in plan, name
         assert "SinglePartition" not in plan, name
@@ -444,6 +458,7 @@ def test_pagerank_broadcasts_iteration_joins(spark, sf_dir):
     hash/broadcast equi-joins; iterating never plans a cartesian over
     data-sized frames (the only NLJ is the 1-row node-count)."""
     plan = plan_of(spark, sf_dir, "q_graph_pagerank")
+    require_scans(plan)
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
 
@@ -467,6 +482,7 @@ def test_scd2_snapshot_windows_on_user(spark, sf_dir):
     """The AS-OF reconstruction is one lead() window on user_id plus a
     filter — no range join, no global sort."""
     plan = plan_of(spark, sf_dir, "q_scd2_snapshot")
+    require_scans(plan)
     assert "hashpartitioning(user_id" in plan
     assert "SinglePartition" not in plan
     assert "CartesianProduct" not in plan
@@ -476,6 +492,7 @@ def test_perplexity_equi_joins_partial_aggs(spark, sf_dir):
     """LM scoring joins on bigram/w1 equi-keys with map-side-combined
     count tables — never a doc-pair or token-pair product."""
     plan = plan_of(spark, sf_dir, "q_text_perplexity")
+    require_scans(plan)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "partial_count" in plan
@@ -494,6 +511,7 @@ def test_centroid_partial_aggregates_components(spark, sf_dir):
     inside each partition — the shuffle carries |labels|×|dims| partial
     rows, not raw vectors."""
     plan = plan_of(spark, sf_dir, "q_embed_centroid")
+    require_scans(plan)
     assert "partial_sum" in plan or "partial_avg" in plan
     assert "SinglePartition" not in plan
     assert "CartesianProduct" not in plan
@@ -502,7 +520,8 @@ def test_centroid_partial_aggregates_components(spark, sf_dir):
 def test_psi_aggregates_before_joins(spark, sf_dir):
     """PSI's joins run over count frames (post-agg), never raw events;
     everything after the first agg is bucket-sized."""
-    plan = plan_of(spark, sf_dir, "q_dq_psi")
+    plan = plan_behind_cuts(spark, sf_dir, "q_dq_psi")
+    require_scans(plan)
     assert "partial_count" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -608,6 +627,7 @@ def test_cms_counters_broadcast_topk_no_global_sort(spark, sf_dir):
     final top-20 is TakeOrderedAndProject — no sort-merge join of the
     probe against counters, no global sort."""
     plan = plan_of(spark, sf_dir, "q_agg_cms_topk")
+    require_scans(plan)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "TakeOrderedAndProject" in plan
@@ -648,6 +668,7 @@ def test_ml_score_is_fused_narrow(spark, sf_dir):
     """The ICDE'25 inference-as-SQL claim, checked: model + features
     compile to ONE codegen'd narrow stage — no shuffle, no Python."""
     plan = plan_of(spark, sf_dir, "q_ml_score")
+    require_scans(plan)
     assert "codegen id" in plan
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -656,6 +677,7 @@ def test_ml_score_is_fused_narrow(spark, sf_dir):
 def test_new_filters_are_narrow(spark, sf_dir):
     for name in ("q_text_gopher", "q_text_readability", "q_fn_url"):
         plan = plan_of(spark, sf_dir, name)
+        require_scans(plan)
         assert "Exchange" not in plan, name
         assert "BatchEvalPython" not in plan, name
 
@@ -664,7 +686,8 @@ def test_kmeans_broadcasts_centroids(spark, sf_dir):
     """Lloyd assignment must broadcast the k×dim centroid frame and
     re-center via partial aggs — a shuffled centroid join or a
     non-combined re-centering would not survive 100 TB."""
-    plan = plan_of(spark, sf_dir, "q_embed_kmeans")
+    plan = plan_behind_cuts(spark, sf_dir, "q_embed_kmeans")
+    require_scans(plan)
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "partial_avg" in plan or "partial_sum" in plan
@@ -675,6 +698,7 @@ def test_semantic_dedup_single_cluster_shuffle(spark, sf_dir):
     one exchange (the cluster key), Arrow-batched Python, no pairs
     frame before Python."""
     plan = plan_of(spark, sf_dir, "q_dedup_semantic")
+    require_scans(plan)
     assert "FlatMapGroupsInPandas" in plan
     assert plan.count("Exchange") >= 1
     assert "CartesianProduct" not in plan
@@ -690,7 +714,8 @@ def test_qualify_windows_on_custkey(spark, sf_dir):
 
 
 def test_overlap_join_is_day_equi_broadcast(spark, sf_dir):
-    plan = plan_of(spark, sf_dir, "q_join_overlap")
+    plan = plan_behind_cuts(spark, sf_dir, "q_join_overlap")
+    require_scans(plan)
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -783,6 +808,7 @@ def test_reservoir_windows_are_sharded_then_merged(spark, sf_dir):
 
 def test_embed_cov_single_reduce_no_join(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "q_embed_cov")
+    require_scans(plan)
     # all O(d²) moments in one partial/final agg — no join, no window
     assert "Join" not in plan and "Window" not in plan
     assert "partial_sum" in plan
@@ -799,6 +825,7 @@ def test_ndcg_reuses_user_partitioning(spark, sf_dir):
 
 def test_spearman_rank_frames_broadcast_back(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "q_stats_spearman")
+    require_scans(plan)
     # both distinct-value rank frames come back via broadcast joins —
     # the fact table is never shuffled for the join
     assert plan.count("BroadcastHashJoin") >= 2

@@ -7,7 +7,8 @@ from __future__ import annotations
 
 import math
 
-from hypothesis import given, settings
+import pytest
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -194,60 +195,50 @@ def _union_find(edges):
     return {n: find(n) for n in parent}
 
 
-@settings(max_examples=8, deadline=None)
-@given(_EDGES)
-def test_component_labels_match_union_find(spark, edges):
-    """Min-label propagation over a random edge list must agree with a
-    driver-side union-find on every node's component label."""
-    from polybot_data_etl_spark.functions.dedup import component_labels
+def _component_labels(pairs, supersteps: bool) -> dict:
+    """``component_labels(pairs)`` as {node: lbl}.  ``supersteps``
+    lowers the local union-find ceiling to 0, forcing the distributed
+    min-label loop, and fails unless that loop really ran (it is the
+    only path that checkpoints eagerly)."""
+    from pyspark.sql.classic.dataframe import DataFrame
 
-    pairs = spark.createDataFrame(
-        [(a, b) for a, b in edges], "a_id long, b_id long"
-    )
-    # both execution paths must agree with the reference: the
-    # size-adaptive driver union-find (default at this scale) and the
-    # distributed min-label supersteps (forced via local_threshold=0)
-    for kw in ({}, {"local_threshold": 0}):
+    from polybot_data_etl_spark.functions import dedup
+
+    real = DataFrame.localCheckpoint
+    eager_cuts = []
+
+    def counting(self, eager=True, storageLevel=None):
+        eager_cuts.append(eager)
+        return real(self, eager, storageLevel)
+
+    with pytest.MonkeyPatch.context() as mp:
+        if supersteps:
+            mp.setattr(dedup, "_CC_LOCAL_EDGES", 0)
+        mp.setattr(DataFrame, "localCheckpoint", counting)
         got = {
             r["node"]: r["lbl"]
-            for r in component_labels(pairs, **kw).collect()
+            for r in dedup.component_labels(pairs).collect()
         }
-        want = _union_find(edges)
-        assert got == want, kw
+    assert any(eager_cuts) == supersteps, eager_cuts
+    return got
 
 
 @settings(max_examples=8, deadline=None)
 @given(_EDGES)
-def test_component_labels_star_match_union_find(spark, edges):
-    """The large-star/small-star fallback (VERDICT r3 #9) must agree
-    with driver-side union-find on every node's component label —
-    including the long-chain graphs it exists for."""
-    from polybot_data_etl_spark.functions.dedup import component_labels
-
+# A 101-node path needs 50 two-hop supersteps: past any fixed cap on
+# the superstep loop (a cap of 20 left 59 nodes with a non-zero label).
+@example([(i, i + 1) for i in range(100)])
+def test_component_labels_match_union_find(spark, edges):
+    """Min-label propagation over a random edge list must agree with a
+    driver-side union-find on every node's component label, on both
+    execution paths: the size-adaptive driver union-find (default at
+    this scale) and the distributed min-label supersteps."""
     pairs = spark.createDataFrame(
         [(a, b) for a, b in edges], "a_id long, b_id long"
     )
-    got = {
-        r["node"]: r["lbl"]
-        for r in component_labels(pairs, algorithm="star").collect()
-    }
-    assert got == _union_find(edges)
-
-
-def test_component_labels_star_long_chain(spark):
-    """A 40-node path — the O(diameter) worst case for propagation —
-    must converge for the star formulation well inside the iteration
-    cap (O(log n) rounds)."""
-    from polybot_data_etl_spark.functions.dedup import component_labels_star
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(40)], "a_id long, b_id long"
-    )
-    got = {
-        r["node"]: r["lbl"]
-        for r in component_labels_star(pairs, max_iters=10).collect()
-    }
-    assert got == {i: 0 for i in range(41)}
+    want = _union_find(edges)
+    for supersteps in (False, True):
+        assert _component_labels(pairs, supersteps) == want, supersteps
 
 
 # --- hypothesis: forward as-of vs brute force --------------------------

@@ -38,10 +38,9 @@ def test_r10_batch_is_registered_with_oracles():
     assert len(qs) == registry.EXPECTED_QUERY_COUNT
     assert len(os_) == registry.EXPECTED_ORACLE_COUNT
     # The r10 driver recorded the whole batch green (CORRECTNESS_r10),
-    # so the names must have left the new-this-round tier and joined
-    # the recorded evidence tier — the derivation is the point.
-    assert R10_BATCH <= registry._RECORDED, sorted(
-        R10_BATCH - registry._RECORDED
+    # so the names must be in the evidence-derived recorded set.
+    assert R10_BATCH <= registry._DRIVER_GREEN, sorted(
+        R10_BATCH - registry._DRIVER_GREEN
     )
 
 
